@@ -1,0 +1,35 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
+/** The write-side distribution rule shared by every partitioned
+  * (`partitionBy(dirs)`) write: the catalog's clustered layouts and the
+  * medallion's silver/gold builds, streaming batches, incremental
+  * overwrites and compaction. */
+object Writes {
+
+  /** Hash-cluster `df` on the directory columns at a PINNED width, the
+    * session's shuffle parallelism, so each directory lands in exactly one
+    * task and the write makes one file per directory (times
+    * `maxRecordsPerFile` splits). A keyless `repartition(cols)` would
+    * leave the width to AQE, whose byte-based coalescing sees a write of a
+    * few MB as "small" and collapses it to ONE task, which then opens,
+    * writes and closes every directory's file in turn: per-task cost here
+    * scales with the number of directories, which AQE's model cannot see.
+    * An explicit width is exempt from coalescing. Measured: a 240-dir
+    * composite catalog append at sf0.1, 3.9-5.9 s -> 1.0-1.4 s; the
+    * medallion silver stage (119 dirs, 1,386 rows) on a 4-vCPU host,
+    * 4.4 s -> 2.3 s.
+    *
+    * The planner drops the exchange when the child's partitioning
+    * already satisfies it: gold's aggregate exchange on `interaction_date`
+    * does, and AQE then coalesces THAT exchange, so gold's write stays one
+    * task. No column list leaves `df` as it is.
+    */
+  def clusterByDirs(df: DataFrame, dirCols: Seq[String]): DataFrame =
+    if (dirCols.isEmpty) df
+    else df.repartition(
+      math.max(1, df.sparkSession.sessionState.conf.numShufflePartitions),
+      dirCols.map(col): _*)
+}

@@ -1,5 +1,6 @@
 package graft.medallion
 
+import graft.Writes
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -79,14 +80,14 @@ object Maintenance {
       case Some(cur) if catalogExists =>
         // positional insert: align to the table's column order (saveAsTable
         // moved the partition columns to the end of the schema)
-        val aligned = slice.select(cur.columns.map(col): _*)
-          .repartition(col("interaction_date"), col("channel"))
+        val aligned = Writes.clusterByDirs(
+          slice.select(cur.columns.map(col): _*), Seq("interaction_date", "channel"))
         withDynamicOverwrite(spark) {
           aligned.write.mode("overwrite").insertInto(cfg.silverFqn)
         }
       case Some(_) =>
         withDynamicOverwrite(spark) {
-          slice.repartition(col("interaction_date"), col("channel"))
+          Writes.clusterByDirs(slice, Seq("interaction_date", "channel"))
             .write.mode("overwrite")
             .partitionBy("interaction_date", "channel")
             .parquet(cfg.silverFallbackUri)
@@ -230,7 +231,7 @@ object Maintenance {
     val bytesPerRow = math.max(1L, totalBytes / math.max(1L, rows))
     val rowsPerFile = math.max(1L, targetFileMb.toLong * 1024 * 1024 / bytesPerRow)
     val clustered =
-      if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*)
+      if (partitionCols.nonEmpty) Writes.clusterByDirs(df, partitionCols)
       else df.repartition(math.max(1,
         (totalBytes / (targetFileMb.toLong * 1024 * 1024)).toInt + 1))
     val stripped = path.stripSuffix("/")

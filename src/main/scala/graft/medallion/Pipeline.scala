@@ -1,6 +1,8 @@
 package graft.medallion
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Writes
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.V2SessionCatalog
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -189,58 +191,67 @@ object Pipeline {
     rows
   }
 
-  /** Write a catalog table: DataFrameWriterV2 replace-table-as-select first
+  /** Write a catalog table: DataFrameWriterV2 replace-table-as-select
     * (the API the reference drives against Iceberg — works when a lakehouse
-    * catalog is configured), then V1 saveAsTable (session catalog, local),
-    * then the reference's partitioned-parquet path fallback (CM:326-340). */
+    * catalog is configured), or V1 saveAsTable on Spark's built-in session
+    * catalog, then the reference's partitioned-parquet path fallback
+    * (CM:326-340). Returns the number of rows written, counted as they
+    * flow into the write that succeeded (an observed metric) rather than
+    * by scanning the written table again. */
   private[medallion] def writeTable(spark: SparkSession, df: DataFrame,
                          cfg: MdpConfig, db: String,
                          table: String, fallbackUri: String,
-                         partitionCols: Seq[String]): String = {
+                         partitionCols: Seq[String]): Long = {
     val fqn = s"${cfg.catalog}.$db.$table"
     // Hash-distribute rows by partition columns before the write (the
     // Iceberg write.distribution-mode=hash posture, docs/TUNING.md:50-53):
     // one shuffle, then each task writes whole partitions — without it every
     // task writes a sliver of every partition (files = tasks x partitions).
-    // Keyless repartition(cols) deliberately: unlike the catalog's
-    // clustered fine-spec writes (file-open-bound, see writeLayout's
-    // pinned width), this layer's write is BYTE-bound (0.25 GB+ of
-    // payload across ~dozens of dirs), where AQE's byte-based coalesce
-    // sizes tasks correctly — an r18 A/B (alternating focused medallion
-    // runs, bronze as the ambient control) read the pinned variant as a
-    // wash-to-regression here, so the pin stays catalog-only.
-    val dist =
-      if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*) else df
+    val dist = Writes.clusterByDirs(df, partitionCols)
     try {
       spark.sql(s"CREATE NAMESPACE IF NOT EXISTS ${cfg.catalog}.$db")
-      try {
-        val writer = dist.writeTo(fqn).using("parquet")
-        val partitioned =
-          if (partitionCols.isEmpty) writer
-          else writer.partitionedBy(col(partitionCols.head),
-            partitionCols.tail.map(col): _*)
-        partitioned.createOrReplace()
-        log(s"Wrote catalog table $fqn (RTAS) partitioned by ${partitionCols.mkString(",")}")
-      } catch {
-        case NonFatal(_) =>
-          // Session catalog has no atomic RTAS; V1 overwrite saveAsTable is
-          // the non-atomic equivalent. Pin the table location to the
-          // fallback URI (external table): the catalog table and the path
-          // fallback are then the SAME files, so catalog readers, path
-          // readers and maintenance jobs can never diverge.
-          dist.write.mode("overwrite").format("parquet")
+      // Spark's built-in session catalog has no RTAS (createOrReplace
+      // always throws there), so it writes through V1 saveAsTable, the
+      // non-atomic equivalent; a session catalog that an Iceberg or Delta
+      // extension replaces is another class and keeps RTAS.
+      val builtInSession = spark.sessionState.catalogManager
+        .catalog(cfg.catalog).isInstanceOf[V2SessionCatalog]
+      val (n, how) =
+        if (builtInSession)
+          // Pin the table location to the fallback URI (external table):
+          // the catalog table and the path fallback are then the SAME
+          // files, so catalog readers, path readers and maintenance jobs
+          // can never diverge.
+          (countWritten(dist)(_.write.mode("overwrite").format("parquet")
             .option("path", fallbackUri)
-            .partitionBy(partitionCols: _*).saveAsTable(fqn)
-          log(s"Wrote catalog table $fqn (saveAsTable at $fallbackUri) " +
-            s"partitioned by ${partitionCols.mkString(",")}")
-      }
-      fqn
+            .partitionBy(partitionCols: _*).saveAsTable(fqn)),
+            s"saveAsTable at $fallbackUri")
+        else
+          (countWritten(dist) { d =>
+            val writer = d.writeTo(fqn).using("parquet")
+            val partitioned =
+              if (partitionCols.isEmpty) writer
+              else writer.partitionedBy(col(partitionCols.head),
+                partitionCols.tail.map(col): _*)
+            partitioned.createOrReplace()
+          }, "RTAS")
+      log(s"Wrote catalog table $fqn ($how) partitioned by ${partitionCols.mkString(",")}")
+      n
     } catch {
       case NonFatal(e) =>
         log(s"Catalog write failed (${e.getMessage}); falling back to parquet $fallbackUri")
-        dist.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(fallbackUri)
-        fallbackUri
+        countWritten(dist)(
+          _.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(fallbackUri))
     }
+  }
+
+  /** Run `write` over `df` and return the number of rows it wrote, from
+    * an observed count on `df`. The count is that of the first execution
+    * of `df`, so `write` must execute it exactly once. */
+  private def countWritten(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
   }
 
   /** Read a layer back: catalog table if present, else its path fallback. */
@@ -283,10 +294,9 @@ object Pipeline {
       clockDate = to_date(timestamp_seconds(lit(cfg.baseEpochS))),
       clockTs = timestamp_seconds(lit(cfg.baseEpochS)),
       clockEpochS = lit(cfg.baseEpochS))
-    val loc = writeTable(spark, silverDf, cfg, "silver",
+    val n = writeTable(spark, silverDf, cfg, "silver",
       "customer_interactions_enriched",
       cfg.silverFallbackUri, Seq("interaction_date", "channel"))
-    val n = readTable(spark, loc, cfg.silverFallbackUri).count()
     log(s"Rows: $n")
     n
   }
@@ -298,9 +308,8 @@ object Pipeline {
     log(s"Silver table contains $silverCount enriched interactions")
     require(silverCount > 0, "Silver table is empty - run silver first")
     val kpis = Gold.kpis(silverDf)
-    val loc = writeTable(spark, kpis, cfg, "gold", "customer_executive_dashboard",
+    val n = writeTable(spark, kpis, cfg, "gold", "customer_executive_dashboard",
       cfg.goldFallbackUri, Seq("interaction_date"))
-    val n = readTable(spark, loc, cfg.goldFallbackUri).count()
     log(s"Rows: $n")
     n
   }
@@ -309,9 +318,10 @@ object Pipeline {
     * flow through the SAME `Silver.enrich` projection as batch, appending
     * into the SAME silver table via foreachBatch (the sink pattern that
     * lets a streaming query drive the table-catalog writer). The first
-    * micro-batch creates the table through `writeTable` (catalog RTAS ->
-    * saveAsTable -> path fallback); later batches append with positional
-    * alignment. With a durable `checkpoint`, restarts resume from the last
+    * micro-batch creates the table through `writeTable` (catalog RTAS, or
+    * saveAsTable on the built-in session catalog, then the path fallback);
+    * later batches append with positional alignment. With a durable
+    * `checkpoint`, restarts resume from the last
     * committed batch — the continuous-ingest variant the reference's
     * unused checkpoints bucket implies (k8s/s3/03-s3-buckets.yaml:32-40).
     *
@@ -348,7 +358,7 @@ object Pipeline {
     enriched.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val dist = batch.repartition(col("interaction_date"), col("channel"))
+        val dist = Writes.clusterByDirs(batch, Seq("interaction_date", "channel"))
         if (spark.catalog.tableExists(cfg.silverFqn)) {
           val cols = spark.table(cfg.silverFqn).columns
           dist.select(cols.map(col): _*)
@@ -406,7 +416,7 @@ object Pipeline {
         val root = new org.apache.hadoop.fs.Path(target)
         val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(root)) {
-          batch.repartition(parts.map(col): _*)
+          Writes.clusterByDirs(batch, parts)
             .write.mode("overwrite").partitionBy(parts: _*).parquet(target)
         } else if (!batch.isEmpty) {
           Maintenance.upsertPartitioned(spark, target, batch,

@@ -21,7 +21,9 @@ import org.apache.spark.sql.types._
   */
 object Sources {
 
-  private val RoundTripRoot = "/tmp/graft_src_roundtrip"
+  /** Where the round-trip dumps live: one directory per JVM under
+    * `java.io.tmpdir`, deleted when the JVM exits. */
+  private lazy val RoundTripRoot = graft.TempDirs.create("graft_src_roundtrip").toString
 
   /** Write each round-trip dump at most once per JVM (same memoize-after-
     * success stance as the Medallion oracle dumps: bench reruns must not

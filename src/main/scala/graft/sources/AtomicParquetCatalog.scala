@@ -35,7 +35,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * committed table untouched (`abortStagedChanges` cleans it eagerly;
   * crash leftovers are swept by the next `dropTable`). This is exactly
   * the old-or-new contract `Pipeline.writeTable`'s session-catalog
-  * fallback cannot give (V1 `saveAsTable(Overwrite)` drops then
+  * path cannot give (V1 `saveAsTable(Overwrite)` drops then
   * recreates — a reader in between sees NO table).
   *
   * Snapshot history — `_current` is the whole snapshot LOG (version dir
@@ -115,13 +115,14 @@ object AtomicParquetCatalog {
 
   /** Register catalog `name` on the session with a fresh temp warehouse
     * if absent — the shared idempotent setup the catalog-backed gates
-    * use (one place to change registration, not one copy per gate). */
+    * use (one place to change registration, not one copy per gate). The
+    * warehouse is deleted when the JVM exits. */
   def ensureRegistered(s: SparkSession, name: String): Unit =
     if (s.conf.getOption(s"spark.sql.catalog.$name").isEmpty) {
       s.conf.set(s"spark.sql.catalog.$name",
         classOf[AtomicParquetCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$name.warehouse",
-        Files.createTempDirectory(s"graft_${name}_wh").toString)
+        graft.TempDirs.create(s"graft_${name}_wh").toString)
     }
 
   /** Hard-link (fall back: copy) a committed version directory's DATA
@@ -322,21 +323,7 @@ object AtomicParquetCatalog {
             parts.exists(_.equalsIgnoreCase(c)))).map(col): _*)
       case _ =>
         if (parts.nonEmpty && PartitionField.clusterWrite(spark, fields))
-          // PINNED-width hash exchange, not repartition(cols): AQE's
-          // byte-based coalescing sees a clustered append as "small"
-          // and collapses it to one task, which then writes every
-          // partition dir's file SEQUENTIALLY — per-task cost here
-          // scales with the number of dirs (file opens/footers), not
-          // bytes, which AQE's model cannot see. An explicit width
-          // (the session's shuffle parallelism — the cluster-sized
-          // knob, 32 locally, e.g. 4096 on the reference cluster) is
-          // exempt from coalescing; rows still hash on the dir cols,
-          // so each dir lands in exactly one task and the file count
-          // is unchanged (~one file per dir). Measured 3.9-5.9 s ->
-          // 1.0-1.4 s on a 240-dir composite append at sf0.1.
-          routed.repartition(
-            math.max(1, spark.sessionState.conf.numShufflePartitions),
-            parts.map(col): _*)
+          graft.Writes.clusterByDirs(routed, parts)
         else routed
     }
     // sort by (partition dirs ++ sort cols): the writer's own required

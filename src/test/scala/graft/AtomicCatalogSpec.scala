@@ -1315,19 +1315,20 @@ class AtomicCatalogSpec extends AnyFunSuite {
       ingestGb = 0.001, payloadKb = 1, partitions = 4,
       catalog = "graft_atomic")
     graft.medallion.Pipeline.bronze(spark, cfg)
-    graft.medallion.Pipeline.silver(spark, cfg)
-    graft.medallion.Pipeline.gold(spark, cfg)
-    // tables live in the atomic catalog and read back through it
-    assert(spark.table(cfg.silverFqn).count() > 0)
-    assert(spark.table(cfg.goldFqn).count() > 0)
+    val silverRows = graft.medallion.Pipeline.silver(spark, cfg)
+    val goldRows = graft.medallion.Pipeline.gold(spark, cfg)
+    // tables live in the atomic catalog and read back through it; the
+    // counts the stages return (taken from the write) are the tables'
+    assert(silverRows > 0 && silverRows == spark.table(cfg.silverFqn).count())
+    assert(goldRows > 0 && goldRows == spark.table(cfg.goldFqn).count())
     // silver is partitioned: a partition-column filter works against it
     val oneDay = spark.table(cfg.silverFqn)
       .select("interaction_date").distinct().head().getDate(0)
     assert(spark.table(cfg.silverFqn)
       .where(col("interaction_date") === oneDay).count() > 0)
     // a re-run REPLACES atomically (no drop window): gold twice is fine
-    graft.medallion.Pipeline.gold(spark, cfg)
-    assert(spark.table(cfg.goldFqn).count() > 0)
+    assert(graft.medallion.Pipeline.gold(spark, cfg) == goldRows)
+    assert(spark.table(cfg.goldFqn).count() == goldRows)
     Seq(cfg.silverFqn, cfg.goldFqn)
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }

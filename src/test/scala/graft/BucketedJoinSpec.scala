@@ -9,8 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * 100 TB, replaces the per-query shuffle with a one-time layout cost.
   */
 class BucketedJoinSpec extends AnyFunSuite {
+  /** Where this spec's tables live. The session's `warehouse.dir` cannot
+    * be relied on: the first session of the JVM fixes it (usually
+    * `./spark-warehouse`), where a table left by an interrupted run makes
+    * the next `saveAsTable` fail with LOCATION_ALREADY_EXISTS. */
+  lazy val wh: String = TempDirs.create("graft_bucket_wh").toString
+
   lazy val spark: SparkSession = {
-    val wh = java.nio.file.Files.createTempDirectory("graft_bucket_wh").toString
     SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -28,10 +33,10 @@ class BucketedJoinSpec extends AnyFunSuite {
     val o = Tables.load(spark, dir, "orders")
     li.write.mode("overwrite").format("parquet")
       .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-      .saveAsTable("b_lineitem")
+      .option("path", s"$wh/b_lineitem").saveAsTable("b_lineitem")
     o.write.mode("overwrite").format("parquet")
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-      .saveAsTable("b_orders")
+      .option("path", s"$wh/b_orders").saveAsTable("b_orders")
 
     val joined = spark.table("b_lineitem")
       .join(spark.table("b_orders"),

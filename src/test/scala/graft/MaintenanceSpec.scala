@@ -118,9 +118,13 @@ class MaintenanceSpec extends AnyFunSuite {
     val cut = to_date(timestamp_seconds(lit(Epoch))) - expr("INTERVAL 15 DAYS")
     all.where(to_date($"event_timestamp") < cut)
       .write.parquet(cfg.bronzeUri)
-    Pipeline.silver(spark, cfg)
-    Pipeline.gold(spark, cfg)
+    // on the session catalog too, the counts the stages return (taken
+    // from the write) are the written tables'
+    val silverRows = Pipeline.silver(spark, cfg)
+    assert(silverRows > 0 && silverRows == spark.table(cfg.silverFqn).count())
+    val goldRows = Pipeline.gold(spark, cfg)
     val total1 = spark.table(cfg.goldFqn).count()
+    assert(goldRows > 0 && goldRows == total1)
 
     // new bronze days arrive; ONLY the incremental legs run
     all.write.mode("overwrite").parquet(cfg.bronzeUri)

@@ -114,6 +114,60 @@ class WriteDistributionSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft_wd.db.aus")
   }
 
+  test("medallion silver: pinned-width exchange, no AQE coalesce, one " +
+      "file per directory") {
+    import graft.medallion.{MdpConfig, Pipeline}
+    val base = TempDirs.create("graft_wd_mdp").toString
+    val cfg = MdpConfig.fromEnv(base).copy(ingestGb = 0.001, payloadKb = 1,
+      partitions = 4, silverShufflePartitions = 4)
+    val writePlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    d: Long): Unit = {
+        // events arrive asynchronously, so bronze's write can still show
+        // up after registration: keep silver's only
+        val plan = qe.executedPlan.toString
+        val silverPath = cfg.silverFallbackUri.stripSuffix("/")
+        if (plan.contains("WriteFiles") && plan.contains(silverPath))
+          writePlans.add(plan)
+      }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    Seq(cfg.silverFqn, cfg.goldFqn).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      Pipeline.bronze(spark, cfg)
+      spark.listenerManager.register(listener)
+      val rows = Pipeline.silver(spark, cfg)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (writePlans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(writePlans.size == 1, s"expected one silver write, got:\n$writePlans")
+      val plan = writePlans.peek()
+      val exchange = plan.linesIterator.find(_.contains("Exchange hashpartitioning"))
+        .getOrElse(fail(s"no hash exchange under the write:\n$plan"))
+      assert(exchange.contains("interaction_date") && exchange.contains("channel") &&
+        exchange.contains(", 4), REPARTITION_BY_NUM"),
+        s"silver's exchange is not pinned at the session width (4):\n$plan")
+      assert(!plan.contains("AQEShuffleRead coalesced"),
+        s"AQE coalesced silver's write exchange:\n$plan")
+      // one file per (interaction_date, channel) directory
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(cfg.silverFallbackUri))
+      val perDir = try walk.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+        .groupBy(_.getParent).values.map(_.size).toSeq
+      finally walk.close()
+      assert(perDir.nonEmpty && perDir.forall(_ == 1),
+        s"files per directory: ${perDir.sorted.reverse.take(10)}")
+      assert(rows == spark.table(cfg.silverFqn).count())
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+      spark.sql(s"DROP TABLE IF EXISTS ${cfg.silverFqn}")
+    }
+  }
+
   test("default write is unclustered (no extra exchange) and correct") {
     import spark.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_wd.db")

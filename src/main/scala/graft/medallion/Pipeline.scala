@@ -301,8 +301,9 @@ object Pipeline {
     n
   }
 
-  /** Gold: KPI aggregate from the silver table. */
-  def gold(spark: SparkSession, cfg: MdpConfig): Long = {
+  /** Gold: KPI aggregate from the silver table, listing silver's partition
+    * directories at most one task per core ([[Maintenance.withListingCap]]). */
+  def gold(spark: SparkSession, cfg: MdpConfig): Long = Maintenance.withListingCap(spark) {
     val silverDf = readTable(spark, cfg.silverFqn, cfg.silverFallbackUri)
     val silverCount = silverDf.count()
     log(s"Silver table contains $silverCount enriched interactions")
@@ -430,7 +431,7 @@ object Pipeline {
   /** The reference's external-validation SQL (run_pipeline.py:238-277) with
     * the *correct* table names (the script checks stale iot_* names —
     * SURVEY §1.4-2). */
-  def validate(spark: SparkSession, cfg: MdpConfig): Boolean = {
+  def validate(spark: SparkSession, cfg: MdpConfig): Boolean = Maintenance.withListingCap(spark) {
     readTable(spark, cfg.silverFqn, cfg.silverFallbackUri)
       .createOrReplaceTempView("v_silver")
     readTable(spark, cfg.goldFqn, cfg.goldFallbackUri)

@@ -76,8 +76,14 @@ object QProfile10 {
       v1s += x; v2s += y
       println(f"[qp10] rep $rep ambient $a%6.3f  v1 $x%6.3f  v2 $y%6.3f  (order ${if (rep % 2 == 1) "v1-first" else "v2-first"})")
     }
-    def stats(xs: Seq[Double]): String =
-      f"min ${xs.min}%6.3f  med ${xs.sorted.apply(xs.size / 2)}%6.3f"
+    def stats(xs: Seq[Double]): String = {
+      val sorted = xs.sorted
+      // true median: average the two middle elements on even length
+      val med =
+        if (sorted.size % 2 == 1) sorted(sorted.size / 2)
+        else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
+      f"min ${sorted.head}%6.3f  med $med%6.3f"
+    }
     println(s"[qp10] v1: ${stats(v1s.toSeq)}")
     println(s"[qp10] v2: ${stats(v2s.toSeq)}")
     spark.stop()

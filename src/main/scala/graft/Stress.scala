@@ -23,15 +23,17 @@ import org.apache.spark.sql.functions._
   *    ~log2(diameter) rounds regardless of K).
   *
   * Usage: sbt 'runMain graft.Stress [K]'   (default K=10, sf from
-  * SPARK_GRAFT_SF_DIR, default sf0.1)
+  * SPARK_GRAFT_SF_DIR, default sf0.1; cores and shuffle partitions from
+  * SPARK_GRAFT_CPUS, default 32, as in `graft.Bench`)
   */
 object Stress {
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(10)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -433,16 +435,15 @@ object Stress {
         .where($"doc_id" >= 100L && $"doc_id" < 200L)
         .agg(org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1))).head.getLong(0)
-      spark.conf.set("spark.sql.catalog.graft.read.fileSkipping", "false")
-      val (tSkipOff, _) = secs(morstRange())
-      spark.conf.unset("spark.sql.catalog.graft.read.fileSkipping")
+      val (tSkipOff, _) = withConf(spark,
+        "spark.sql.catalog.graft.read.fileSkipping" -> "false")(secs(morstRange()))
       val (tSkipOn, nInRange) = secs(morstRange())
       require(nInRange == 100L, s"range read served $nInRange of 100")
-      spark.conf.set("spark.sql.catalog.graft.write.deleteMode",
-        "merge-on-read")
-      val (tMorDelete, _) = secs(spark.sql(
-        "DELETE FROM graft_sx.db.morst WHERE doc_id >= 100 AND doc_id < 200"))
-      spark.conf.unset("spark.sql.catalog.graft.write.deleteMode")
+      val (tMorDelete, _) = withConf(spark,
+          "spark.sql.catalog.graft.write.deleteMode" -> "merge-on-read") {
+        secs(spark.sql(
+          "DELETE FROM graft_sx.db.morst WHERE doc_id >= 100 AND doc_id < 200"))
+      }
       require(spark.table("graft_sx.db.morst").count() == nDocs - 100,
         "merge-on-read delete must remove exactly the range")
       val (tRewriteDel, _) = secs(spark.sql(
@@ -474,9 +475,8 @@ object Stress {
         .where($"h" === blmProbe)
         .agg(org.apache.spark.sql.functions.sum($"n_chars"))
         .head.getLong(0)
-      spark.conf.set("spark.sql.catalog.graft.read.bloomSkipping", "false")
-      val (tBloomOff, hitOff) = secs(bloomLookup())
-      spark.conf.unset("spark.sql.catalog.graft.read.bloomSkipping")
+      val (tBloomOff, hitOff) = withConf(spark,
+        "spark.sql.catalog.graft.read.bloomSkipping" -> "false")(secs(bloomLookup()))
       val (tBloomOn, hitOn) = secs(bloomLookup())
       require(hitOn == hitOff && hitOn > 0L,
         s"bloom lookup must serve the same row ($hitOff vs $hitOn)")
@@ -676,14 +676,15 @@ object Stress {
       // stats + sidecar counts — zero tasks, so mor_count_s must stay
       // ~flat as K (and the table) grow 10x. The merge was pure
       // updates (delete+reinsert), so the net row count is unchanged.
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      val (tMorCount, morCountOk) = secs {
-        val df = spark.sql("SELECT count(*) FROM graft_cl.db.cl")
-        val plan = df.queryExecution.executedPlan.toString
-        df.collect()(0).getLong(0) == 25000L * 32 * n &&
-          plan.contains("LocalTableScan")
+      val (tMorCount, morCountOk) =
+          withConf(spark, "spark.sql.parquet.aggregatePushdown" -> "true") {
+        secs {
+          val df = spark.sql("SELECT count(*) FROM graft_cl.db.cl")
+          val plan = df.queryExecution.executedPlan.toString
+          df.collect()(0).getLong(0) == 25000L * 32 * n &&
+            plan.contains("LocalTableScan")
+        }
       }
-      spark.conf.unset("spark.sql.parquet.aggregatePushdown")
       require(morCountOk,
         "mor count must serve the exact answer from metadata")
       // round-17: maintenance TRANSPARENCY at scale — a compaction

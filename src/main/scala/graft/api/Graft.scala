@@ -28,8 +28,8 @@ object Graft {
     * = (5 bands, 3 rowsPerBand), i.e. 15 hashes. S-curve recall at the
     * observed near-dup mode: 0.973 at J = 0.8, 0.9997 at J = 0.9 (the
     * corpus's true J >= 0.5 edges all sit at J >= 0.79 — measured by the
-    * round-10 BandingProbe, which also read recall 256/256 vs the prior
-    * banding's verified edge set at sf0.1). The prior 8-hash / 4x2
+    * round-10 banding probe (PERF.md), which also read recall 256/256 vs
+    * the prior banding's verified edge set at sf0.1). The prior 8-hash / 4x2
     * banding had r = 2 band keys, whose buckets collide for J ~ 0.2-0.35
     * template pairs: 866k raw bucket pairs and 216k agreement survivors
     * for 256 true edges at sf0.1 (a ~1000x verify overfetch). r = 3 keys

@@ -24,26 +24,11 @@ import scala.util.control.NonFatal
   */
 object Maintenance {
 
-  /** Set the session conf `key` to `value` for the duration of `f`, then
-    * restore the session's own setting: its previous value, or unset again
-    * when it had none. The medallion's one set-and-restore rule; the
-    * setting is session-wide, so two overlapping scopes on the same key
-    * from different threads can restore each other's value. */
-  private[medallion] def withConf[A](spark: SparkSession, key: String,
-                                     value: String)(f: => A): A = {
-    val prev = spark.conf.getAll.get(key)
-    spark.conf.set(key, value)
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Set dynamic partition-overwrite for the duration of `f`: an
     * `INSERT OVERWRITE` then replaces only the partitions present in the
     * written frame (idempotent partition re-processing), not the table. */
   private def withDynamicOverwrite[A](spark: SparkSession)(f: => A): A =
-    withConf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic")(f)
+    graft.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(f)
 
   /** Cap the partition-listing job at the session's cores for the duration
     * of `f`: `spark.sql.sources.parallelPartitionDiscovery.parallelism`
@@ -60,7 +45,7 @@ object Maintenance {
   private[medallion] def withListingCap[A](spark: SparkSession)(f: => A): A = {
     val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
     val cap = math.min(spark.conf.get(key).toInt, spark.sparkContext.defaultParallelism)
-    withConf(spark, key, cap.toString)(f)
+    graft.withConf(spark, key -> cap.toString)(f)
   }
 
   /** Incremental silver: enrich and write ONLY the bronze rows belonging to

@@ -494,18 +494,11 @@ object Extras {
       .writeTo("graft_th.db.dyn").using("parquet")
       .partitionedBy($"o_orderstatus")
       .createOrReplace()
-    val prior = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    graft.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       s.sql("""INSERT OVERWRITE graft_th.db.dyn
               |SELECT o_orderkey, price + CAST(1000000.0 AS DOUBLE), o_orderstatus
               |FROM graft_th.db.dyn VERSION AS OF 0
               |WHERE o_orderstatus = 'O'""".stripMargin)
-    } finally {
-      prior match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
     }
     s.table("graft_th.db.dyn")
       .select($"o_orderkey", $"price", $"o_orderstatus")
@@ -630,17 +623,9 @@ object Extras {
     * gates flip session-global plan confs, and a hardcoded restore (or
     * a missing one) would leak the override into every later plan of
     * the same session. */
-  private def withSpjConfs[A](s: SparkSession)(body: => A): A = {
-    val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-    val prior = keys.map(k => k -> s.conf.getOption(k))
-    keys.foreach(s.conf.set(_, "true"))
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+  private def withSpjConfs[A](s: SparkSession)(body: => A): A =
+    graft.withConf(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")(body)
 
   /** q81: STORAGE-PARTITIONED JOIN — two catalog tables partitioned on
     * the join key (customers and suppliers by nation) joined with ZERO
@@ -876,12 +861,11 @@ object Extras {
             | USING parquet PARTITIONED BY (truncate(100, c_custkey))""".stripMargin)
     // hash-clustered like q87: 150 blocks at sf0.1 is fine-grained
     // enough that tasks x blocks tiny files dominate the write cost
-    s.conf.set("spark.sql.catalog.graft.write.clusterByPartitions", "true")
-    try Tables.load(s, dir, "customer")
-      .select($"c_custkey", $"c_acctbal".as("bal"))
-      .writeTo("graft_ma.db.ctrunc").append()
-    finally s.conf
-      .unset("spark.sql.catalog.graft.write.clusterByPartitions")
+    graft.withConf(s, "spark.sql.catalog.graft.write.clusterByPartitions" -> "true") {
+      Tables.load(s, dir, "customer")
+        .select($"c_custkey", $"c_acctbal".as("bal"))
+        .writeTo("graft_ma.db.ctrunc").append()
+    }
     s.table("graft_ma.db.ctrunc")
       .groupBy(($"c_custkey" - pmod($"c_custkey", lit(100L))).as("block"))
       .agg(count(lit(1)).as("n_customers"), moneySum($"bal").as("total"))
@@ -1072,13 +1056,12 @@ object Extras {
       .partitionedBy($"o_orderstatus").create()
     def inodes(): Map[String, Any] = gmaDataInodes(gmaHeadDir(s, "ord_mor"))
     val before = inodes()
-    s.conf.set("spark.sql.catalog.graft.write.deleteMode", "merge-on-read")
-    try {
+    graft.withConf(s, "spark.sql.catalog.graft.write.deleteMode" -> "merge-on-read") {
       s.sql("DELETE FROM graft_ma.db.ord_mor " +
         "WHERE o_custkey >= 100 AND o_custkey <= 400")
       s.sql("DELETE FROM graft_ma.db.ord_mor " +
         "WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 250000.0")
-    } finally s.conf.unset("spark.sql.catalog.graft.write.deleteMode")
+    }
     require(inodes() == before,
       "merge-on-read DELETE must hard-link every data file unchanged")
     require(s.table("graft_ma.db.ord_mor.deletes").count() == 2L,
@@ -1271,10 +1254,7 @@ object Extras {
       .select($"o_orderkey", $"o_custkey", $"o_totalprice")
       .repartition(8)
       .writeTo("graft_ma.db.ord_agg").using("parquet").createOrReplace()
-    val key = "spark.sql.parquet.aggregatePushdown"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
+    graft.withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true") {
       val df = s.sql(
         """SELECT CAST(count(*) AS BIGINT) AS n_orders,
           | min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
@@ -1287,9 +1267,6 @@ object Extras {
       // session-global conf is restored before other gates plan
       df.cache().count()
       df
-    } finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -1562,10 +1539,9 @@ object Extras {
     // a MoR DELETE spanning BOTH layouts: its entry must survive the
     // unify restricted to the linked current-layout files while the
     // legacy files' share is materialized by the partial rewrite
-    s.conf.set("spark.sql.catalog.graft.write.deleteMode", "merge-on-read")
-    try s.sql("DELETE FROM graft_ma.db.unify " +
-      "WHERE user_id >= 10 AND user_id <= 40")
-    finally s.conf.unset("spark.sql.catalog.graft.write.deleteMode")
+    graft.withConf(s, "spark.sql.catalog.graft.write.deleteMode" -> "merge-on-read") {
+      s.sql("DELETE FROM graft_ma.db.unify WHERE user_id >= 10 AND user_id <= 40")
+    }
     def headDir(): java.nio.file.Path = gmaHeadDir(s, "unify")
     def dataInodes(v: java.nio.file.Path,
         prefix: String => Boolean): Map[String, Any] =
@@ -1971,13 +1947,12 @@ object Extras {
       out.count() // execute now so the skipping counts are observable
       out
     }
-    s.conf.set("spark.sql.catalog.graft.read.bloomSkipping", "false")
-    try {
+    graft.withConf(s, "spark.sql.catalog.graft.read.bloomSkipping" -> "false") {
       run().unpersist()
       require(kc() != null && kc()._1 == kc()._2 && kc()._2 == 12,
         s"q111: min/max stats must be UNABLE to prune the uniform hash " +
           s"key (all 12 files kept), got ${kc()}")
-    } finally s.conf.unset("spark.sql.catalog.graft.read.bloomSkipping")
+    }
     val out = run()
     require(kc() != null && kc()._2 == 12 && kc()._1 <= 4,
       s"q111: bloom probing must keep <=4 of 12 files for two keys " +
@@ -2024,6 +1999,12 @@ object Extras {
             |GROUP BY _commit_step, _change_type
             |ORDER BY _commit_step, _change_type""".stripMargin)
   }
+
+  /** Run `f` with merge-on-read aggregate pushdown switched off: the
+    * row-scan path the q113-q116 gates cross-check their metadata
+    * answers against. */
+  private def withMorAggScan[A](s: SparkSession)(f: => A): A =
+    graft.withConf(s, "spark.sql.catalog.graft.read.morAggPushdown" -> "false")(f)
 
   /** q113: DELETE-AWARE AGGREGATE PUSHDOWN — COUNT(*) stays a
     * zero-scan metadata answer WHILE merge-on-read delete entries are
@@ -2084,10 +2065,7 @@ object Extras {
     require(sidecars(".pred") >= 1 && sidecars(".pos") >= 1,
       s"q113 needs BOTH live sidecar kinds, got " +
         s"pred=${sidecars(".pred")} pos=${sidecars(".pos")}")
-    val key = "spark.sql.parquet.aggregatePushdown"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
+    graft.withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true") {
       val df = s.sql("SELECT CAST(count(*) AS BIGINT) AS n_live " +
         "FROM graft_ma.db.ord_cnt")
       val plan = df.queryExecution.executedPlan.toString
@@ -2098,17 +2076,12 @@ object Extras {
       val pushed = df.collect()(0).getLong(0)
       // cross-check: the kill-switch forces the row-scan path — the
       // metadata answer must agree with it exactly
-      s.conf.set("spark.sql.catalog.graft.read.morAggPushdown", "false")
-      val scanned =
-        try s.sql("SELECT count(*) FROM graft_ma.db.ord_cnt")
-          .collect()(0).getLong(0)
-        finally s.conf.unset("spark.sql.catalog.graft.read.morAggPushdown")
+      val scanned = withMorAggScan(s) {
+        s.sql("SELECT count(*) FROM graft_ma.db.ord_cnt").collect()(0).getLong(0)
+      }
       require(pushed == scanned,
         s"q113: pushed count $pushed != scanned count $scanned")
       df
-    } finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -2170,10 +2143,7 @@ object Extras {
     require(sidecars(".pred") >= 1 && sidecars(".pos") >= 1,
       s"q114 needs BOTH live sidecar kinds, got " +
         s"pred=${sidecars(".pred")} pos=${sidecars(".pos")}")
-    val key = "spark.sql.parquet.aggregatePushdown"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
+    graft.withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true") {
       val df = s.sql("SELECT CAST(count(*) AS BIGINT) AS n_live " +
         "FROM graft_ma.db.ord_cntp " +
         "WHERE o_orderdate >= DATE '1995-01-01'")
@@ -2183,18 +2153,13 @@ object Extras {
       require(!plan.toLowerCase.contains("parquet"),
         s"q114: the pruned count plan still scans data files:\n$plan")
       val pushed = df.collect()(0).getLong(0)
-      s.conf.set("spark.sql.catalog.graft.read.morAggPushdown", "false")
-      val scanned =
-        try s.sql("SELECT count(*) FROM graft_ma.db.ord_cntp " +
-            "WHERE o_orderdate >= DATE '1995-01-01'")
-          .collect()(0).getLong(0)
-        finally s.conf.unset("spark.sql.catalog.graft.read.morAggPushdown")
+      val scanned = withMorAggScan(s) {
+        s.sql("SELECT count(*) FROM graft_ma.db.ord_cntp " +
+          "WHERE o_orderdate >= DATE '1995-01-01'").collect()(0).getLong(0)
+      }
       require(pushed == scanned,
         s"q114: pushed count $pushed != scanned count $scanned")
       df
-    } finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -2234,10 +2199,7 @@ object Extras {
             |WHEN MATCHED THEN DELETE""".stripMargin)
     require(s.table("graft_ma.db.ord_mm.deletes").count() >= 1L,
       "q115 needs a live equality entry")
-    val key = "spark.sql.parquet.aggregatePushdown"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
+    graft.withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true") {
       val df = s.sql(
         """SELECT CAST(count(*) AS BIGINT) AS n_live,
           | min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
@@ -2248,17 +2210,13 @@ object Extras {
       require(!plan.toLowerCase.contains("parquet"),
         s"q115: the pushed plan still scans data files:\n$plan")
       val pushed = df.collect()(0)
-      s.conf.set("spark.sql.catalog.graft.read.morAggPushdown", "false")
-      val scanned =
-        try s.sql("SELECT CAST(count(*) AS BIGINT), min(o_orderkey), " +
-            "max(o_orderkey) FROM graft_ma.db.ord_mm").collect()(0)
-        finally s.conf.unset("spark.sql.catalog.graft.read.morAggPushdown")
+      val scanned = withMorAggScan(s) {
+        s.sql("SELECT CAST(count(*) AS BIGINT), min(o_orderkey), " +
+          "max(o_orderkey) FROM graft_ma.db.ord_mm").collect()(0)
+      }
       require(pushed.toSeq == scanned.toSeq,
         s"q115: pushed $pushed != scanned $scanned")
       df
-    } finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -2287,10 +2245,7 @@ object Extras {
       .tableProperty("write.merge.mode", "merge-on-read")
       .tableProperty("write.stats.sums", "true")
       .create()
-    val key = "spark.sql.parquet.aggregatePushdown"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
+    graft.withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true") {
       // unfiltered SUM/AVG/COUNT — and the reference's dominant money
       // shape, an exact DECIMAL sum — all pure metadata answers
       val pre = s.sql(
@@ -2312,15 +2267,13 @@ object Extras {
       require(prPlan.contains("LocalTableScan"),
         s"q116: the pruned SUM was not served from metadata:\n$prPlan")
       // kill-switch cross-check: the scan path agrees exactly
-      s.conf.set("spark.sql.catalog.graft.read.morAggPushdown", "false")
-      val (preScan, prunedScan) =
-        try (s.sql("SELECT sum(o_custkey), avg(o_custkey), " +
+      val (preScan, prunedScan) = withMorAggScan(s) {
+        (s.sql("SELECT sum(o_custkey), avg(o_custkey), " +
             "CAST(count(*) AS BIGINT), sum(o_price) " +
-            "FROM graft_ma.db.ord_sum")
-            .collect()(0),
+            "FROM graft_ma.db.ord_sum").collect()(0),
           s.sql("SELECT sum(o_custkey) FROM graft_ma.db.ord_sum " +
             "WHERE o_orderdate >= DATE '1994-01-01'").collect()(0))
-        finally s.conf.unset("spark.sql.catalog.graft.read.morAggPushdown")
+      }
       require(pre.collect()(0).toSeq == preScan.toSeq,
         s"q116: pushed ${pre.collect()(0)} != scanned $preScan")
       require(pruned.collect()(0).toSeq == prunedScan.toSeq,
@@ -2343,9 +2296,6 @@ object Extras {
           .contains("LocalTableScan"),
         "q116: SUM under a live entry must refuse to the scan")
       pre.crossJoin(pruned).crossJoin(after)
-    } finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 

@@ -115,15 +115,18 @@ object AtomicParquetCatalog {
 
   /** Register catalog `name` on the session with a fresh temp warehouse
     * if absent — the shared idempotent setup the catalog-backed gates
-    * use (one place to change registration, not one copy per gate). The
-    * warehouse is deleted when the JVM exits. */
-  def ensureRegistered(s: SparkSession, name: String): Unit =
+    * and specs use (one place to change registration, not one copy per
+    * gate). The warehouse is deleted when the JVM exits. Returns the
+    * catalog's warehouse path. */
+  def ensureRegistered(s: SparkSession, name: String): String = {
     if (s.conf.getOption(s"spark.sql.catalog.$name").isEmpty) {
       s.conf.set(s"spark.sql.catalog.$name",
         classOf[AtomicParquetCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$name.warehouse",
         graft.TempDirs.create(s"graft_${name}_wh").toString)
     }
+    s.conf.get(s"spark.sql.catalog.$name.warehouse")
+  }
 
   /** Hard-link (fall back: copy) a committed version directory's DATA
     * files to `dst`, preserving the partition layout — the export half

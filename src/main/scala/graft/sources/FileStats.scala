@@ -151,7 +151,7 @@ private[sources] object FileStats {
 
   private val STORE = "_filestats"
   /** Above this many new files the footer pass leaves the sequential
-    * driver loop. A footer open+parse costs ~7 ms (r19 QProfile12 —
+    * driver loop. A footer open+parse costs ~7 ms (OPTIMIZATION_r19.md §5 —
     * parquet-mr's own cost, identical through Hadoop and NIO inputs),
     * not the ~1 ms the r18 band assumed, so the sequential loop's
     * break-even with the pool sits near one pool-submit overhead:
@@ -434,7 +434,7 @@ private[sources] object FileStats {
                         conf: Configuration): Seq[String] = {
     try {
       // The ~7 ms/footer open+parse cost here is parquet-mr's own
-      // (r19 QProfile12: identical via HadoopInputFile and the NIO
+      // (OPTIMIZATION_r19.md §5: identical via HadoopInputFile and the NIO
       // LocalInputFile, sequential and pooled), so the pool is the
       // right and only lever — measured ~0.2 s per 240-file commit.
       val in = HadoopInputFile.fromPath(

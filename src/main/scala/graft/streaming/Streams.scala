@@ -107,20 +107,15 @@ object Streams {
   private def runToCompletion(agg: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_${streamCounter.incrementAndGet()}"
     val s = agg.sparkSession
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevParts = s.conf.getOption(partsKey)
-    val prevNoData = s.conf.getOption(noDataKey)
+    val confs = Seq("spark.sql.shuffle.partitions" -> StatePartitions) ++
+      (if (mode == "complete")
+        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      else Nil)
     // the session state (incl. these confs) is cloned when the query
     // STARTS; restore immediately after so batch planning is untouched
-    val q = try {
-      s.conf.set(partsKey, StatePartitions)
-      if (mode == "complete") s.conf.set(noDataKey, "false")
+    val q = graft.withConf(s, confs: _*) {
       agg.writeStream.outputMode(mode)
         .format("memory").queryName(name).start()
-    } finally {
-      prevParts.fold(s.conf.unset(partsKey))(s.conf.set(partsKey, _))
-      prevNoData.fold(s.conf.unset(noDataKey))(s.conf.set(noDataKey, _))
     }
     try q.processAllAvailable() finally q.stop()
     s.table(name)

@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** AGGREGATE PUSHDOWN through the catalog scan: with
   * `spark.sql.parquet.aggregatePushdown` on, COUNT(*)/MIN/MAX over a
   * catalog table are answered from parquet FOOTER metadata — the scan
@@ -14,22 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * read. The catalog's [[graft.sources.KeyGroupedParquetScanBuilder]]
   * forwards `SupportsPushDownAggregates` to Spark's parquet builder,
   * so the whole machinery composes with snapshot pinning. */
-class AggPushdownSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_ap_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_ap",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_ap.warehouse", warehouse)
-    s
-  }
+class AggPushdownSpec extends GraftSuite {
+  registerCatalog("graft_ap")
 
   test("COUNT/MIN/MAX are answered from footers (PushedAggregation)") {
     import spark.implicits._
@@ -37,9 +18,7 @@ class AggPushdownSpec extends AnyFunSuite {
     (1L to 1000L).map(i => (i, i * 2.0)).toDF("id", "v")
       .repartition(4)
       .writeTo("graft_ap.db.t").using("parquet").createOrReplace()
-    val prior = spark.conf.getOption("spark.sql.parquet.aggregatePushdown")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try {
+    withConf("spark.sql.parquet.aggregatePushdown" -> "true") {
       val df = spark.sql(
         "SELECT count(*) AS n, min(id) AS lo, max(id) AS hi " +
           "FROM graft_ap.db.t")
@@ -53,12 +32,8 @@ class AggPushdownSpec extends AnyFunSuite {
       spark.sql("INSERT INTO graft_ap.db.t VALUES (1001, 2002.0)")
       assert(spark.sql("SELECT count(*) FROM graft_ap.db.t")
         .head().getLong(0) === 1001L)
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
-      assert(spark.sql("SELECT count(*) FROM graft_ap.db.t")
-        .head().getLong(0) === 1001L)
-    } finally prior match {
-      case Some(v) => spark.conf.set("spark.sql.parquet.aggregatePushdown", v)
-      case None => spark.conf.unset("spark.sql.parquet.aggregatePushdown")
     }
+    assert(spark.sql("SELECT count(*) FROM graft_ap.db.t")
+      .head().getLong(0) === 1001L)
   }
 }

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Tolerance specs for the approximate aggregates. Sketch internals are
   * engine-specific by design, so the cross-engine gate can only row-count
@@ -12,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * variant; this suite covers the general-purpose aggregates on the
   * testdata tables.
   */
-class ApproxAggSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ApproxAggSpec extends GraftSuite {
   private val dir = "/root/testdata/sf0.01"
 
   test("approx_percentile honors its rank-error bound on events.value") {
@@ -102,7 +93,7 @@ class ApproxAggSpec extends AnyFunSuite {
   }
 
   test("gold KPIs through the KMV sketch stay within 2% of exact") {
-    val base = java.nio.file.Files.createTempDirectory("graft_kmv_mdp").toString
+    val base = tmpDir("graft_kmv_mdp").toString
     val cfg = graft.medallion.MdpConfig.fromEnv(base).copy(
       ingestGb = 0.002, payloadKb = 1, partitions = 4)
     graft.medallion.Pipeline.bronze(spark, cfg)

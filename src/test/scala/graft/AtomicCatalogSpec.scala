@@ -2,9 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The atomic-replace contract of graft.sources.AtomicParquetCatalog —
   * the claims Pipeline's docs could previously only assert are exercised
@@ -14,22 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * swaps atomically too. Plus the medallion integration: silver+gold run
   * against this catalog through Pipeline.writeTable's V2 RTAS branch.
   */
-class AtomicCatalogSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_atomic_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_atomic",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_atomic.warehouse", warehouse)
-    s
-  }
+class AtomicCatalogSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_atomic")
 
   test("createOrReplace is staged RTAS: readable, partitioned, replaceable") {
     import spark.implicits._
@@ -836,9 +820,7 @@ class AtomicCatalogSpec extends AnyFunSuite {
       .toDF("id", "part")
       .writeTo("graft_atomic.db.dyn1").using("parquet")
       .partitionedBy(col("part")).createOrReplace()
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       Seq((10L, "a")).toDF("id", "part")
         .writeTo("graft_atomic.db.dyn1").overwritePartitions()
       // partition a replaced wholesale; b and c untouched
@@ -855,13 +837,6 @@ class AtomicCatalogSpec extends AnyFunSuite {
         .select($"partition_path", $"path").as[(String, String)]
         .collect().toMap
       assert(files.keySet == Set("part=a", "part=b", "part=c"), files)
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
     }
     // STATIC overwrite (the default) keeps whole-table semantics
     Seq((99L, "z")).toDF("id", "part")
@@ -1310,7 +1285,7 @@ class AtomicCatalogSpec extends AnyFunSuite {
   }
 
   test("medallion silver+gold run through the V2 RTAS path on this catalog") {
-    val base = java.nio.file.Files.createTempDirectory("graft_atomic_mdp").toString
+    val base = tmpDir("graft_atomic_mdp").toString
     val cfg = graft.medallion.MdpConfig.fromEnv(base).copy(
       ingestGb = 0.001, payloadKb = 1, partitions = 4,
       catalog = "graft_atomic")

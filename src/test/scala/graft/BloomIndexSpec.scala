@@ -4,9 +4,7 @@ import java.nio.file.{Files, Path => JPath, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** BLOOM-FILTER FILE INDEX (BloomIndex.scala): with `write.bloom-cols`
   * the layout writer embeds parquet's native split-block bloom filters
@@ -20,28 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * files written before the property existed, and the merge-on-read
   * composition — an equality-delete entry's file scope narrows to the
   * files that actually hold the matched keys. */
-class BloomIndexSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_blm_wh").toString
+class BloomIndexSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_blm")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // this suite measures SCAN-level skipping: pin the shared
-    // session's aggregate pushdown OFF so another suite's
-    // builder-level leak cannot reroute its counts to the
-    // metadata path (same defense PlanQualitySpec carries)
-    s.conf.set("spark.sql.parquet.aggregatePushdown", "false")
-    s.conf.set("spark.sql.catalog.graft_blm",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_blm.warehouse", warehouse)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graft_blm.db")
-    s
-  }
+  spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_blm.db")
 
   private def counts(tbl: String): (Int, Int) =
     Option(graft.sources.FileSkippingScan.counts.get(s"db.$tbl"))
@@ -98,14 +78,13 @@ class BloomIndexSpec extends AnyFunSuite {
     val probe = md5Hex("4242")
 
     // probing OFF: min/max spans the space in every file — all kept
-    s.conf.set("spark.sql.catalog.graft.read.bloomSkipping", "false")
-    try {
+    withConf("spark.sql.catalog.graft.read.bloomSkipping" -> "false") {
       graft.sources.FileSkippingScan.counts.clear()
       val off = s.table("graft_blm.db.pt").where($"h" === probe).collect()
       assert(off.length == 1 && off.head.getLong(1) == 4242L % 7)
       assert(counts("pt") == ((8, 8)),
         s"stats alone must keep all 8 files, got ${counts("pt")}")
-    } finally s.conf.unset("spark.sql.catalog.graft.read.bloomSkipping")
+    }
 
     // probing ON: only the file(s) whose bloom admits the key plan
     graft.sources.FileSkippingScan.counts.clear()
@@ -274,15 +253,11 @@ class BloomIndexSpec extends AnyFunSuite {
     mkHashTable("morko", 8)
     s.sql("ALTER TABLE graft_blm.db.morko " +
       "ADD CONSTRAINT morko_pk PRIMARY KEY (h) NOT ENFORCED")
-    s.conf.set("spark.sql.catalog.graft.read.bloomSkipping", "false")
-    s.conf.set("spark.sql.catalog.graft.write.rowLevelMode", "merge-on-read")
-    try {
+    withConf("spark.sql.catalog.graft.read.bloomSkipping" -> "false",
+        "spark.sql.catalog.graft.write.rowLevelMode" -> "merge-on-read") {
       Seq(md5Hex("33")).toDF("h").createOrReplaceTempView("morko_src")
       s.sql("""MERGE INTO graft_blm.db.morko t USING morko_src s
               |ON t.h = s.h WHEN MATCHED THEN DELETE""".stripMargin)
-    } finally {
-      s.conf.unset("spark.sql.catalog.graft.write.rowLevelMode")
-      s.conf.unset("spark.sql.catalog.graft.read.bloomSkipping")
     }
     // uniform hash key: stats cannot narrow, and bloom was OFF — the
     // entry must scope to ALL files (with probing on it scopes to ~1)
@@ -397,13 +372,12 @@ class BloomIndexSpec extends AnyFunSuite {
     mkHashTable("morb", 8)
     s.sql("ALTER TABLE graft_blm.db.morb " +
       "ADD CONSTRAINT morb_pk PRIMARY KEY (h) NOT ENFORCED")
-    s.conf.set("spark.sql.catalog.graft.write.rowLevelMode", "merge-on-read")
-    try {
+    withConf("spark.sql.catalog.graft.write.rowLevelMode" -> "merge-on-read") {
       Seq(md5Hex("11"), md5Hex("22")).toDF("h")
         .createOrReplaceTempView("morb_src")
       s.sql("""MERGE INTO graft_blm.db.morb t USING morb_src s ON t.h = s.h
               |WHEN MATCHED THEN DELETE""".stripMargin)
-    } finally s.conf.unset("spark.sql.catalog.graft.write.rowLevelMode")
+    }
     val scope = entryScope("morb")
     assert(scope.nonEmpty && scope.size <= 3,
       s"two keys must scope the entry to at most 2 files (+fpp slack), " +

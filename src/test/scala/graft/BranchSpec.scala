@@ -2,9 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** BRANCHES on the atomic catalog (parallel pointer logs): fork with
   * `CALL system.create_branch`, bind reads/writes with the `t@branch`
   * identifier, publish with `fast_forward` — git semantics in the
@@ -13,24 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * condition, retention protection ACROSS refs (main's sweep can
   * never vacuum a version a branch still references), orphan-sweep
   * awareness, DDL refusals, and MoR merges on a branch. */
-class BranchSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_br_wh").toString
+class BranchSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_br")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_br",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_br.warehouse", warehouse)
-    s.conf.set("spark.sql.catalog.graft_br.history", "2")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graft_br.db")
-    s
-  }
+  spark.conf.set("spark.sql.catalog.graft_br.history", "2")
+  spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_br.db")
 
   private def ids(table: String): Seq[Long] = {
     import spark.implicits._

@@ -2,10 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** `bucket(n, col)` partition transforms on the atomic catalog — the
   * HIGH-CARDINALITY-KEY partition strategy: rows land in hidden
@@ -18,36 +16,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * filter's key values hash to the bucket directories they live in),
   * bucket-granular MERGE copy-on-write (untouched buckets hard-link),
   * and layout survival through compaction. */
-class BucketTransformSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_bkt_wh").toString
+class BucketTransformSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_bkt")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_bkt",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_bkt.warehouse", warehouse)
-    s
-  }
-
-  private def withBucketing[A](f: => A): A = {
-    // broadcast OFF inside the block: a BroadcastHashJoin also plans
-    // zero ShuffleExchanges, which would make the SPJ asserts vacuous
-    val savedBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try f finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
-    }
-  }
+  // broadcast OFF inside the block: a BroadcastHashJoin also plans
+  // zero ShuffleExchanges, which would make the SPJ asserts vacuous
+  private def withBucketing[A](f: => A): A =
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
 
   private def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
     var n = 0
@@ -193,44 +170,37 @@ class BucketTransformSpec extends AnyFunSuite {
   test("runtime bucket pruning: a dim filter's keys prune fact buckets") {
     import spark.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_bkt.db")
-    val saved = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      (1L to 2000L).map(i => (i, i * 1.0)).toDF("k", "f_v")
-        .writeTo("graft_bkt.db.bf").using("parquet")
-        .partitionedBy(bucket(16, $"k")).createOrReplace()
-      (1L to 2000L by 400).map(k => (k, if (k == 401L) "x" else "y"))
-        .toDF("k", "cat")
-        .writeTo("graft_bkt.db.bd").using("parquet").createOrReplace()
-      val j = spark.table("graft_bkt.db.bf")
-        .join(spark.table("graft_bkt.db.bd").where($"cat" === "x"), Seq("k"))
-        .agg(count(lit(1)).as("n"), sum($"f_v").as("s"))
-      val row = j.collect().head
-      assert(row.getLong(0) == 1 && row.getDouble(1) == 401.0)
-      // the fact scan must have emitted only the one bucket directory
-      // k=401 hashes into (~2000/16 = 125 rows), not the whole table
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-      def scans(p: SparkPlan): Seq[BatchScanExec] =
-        p.collect {
-          case b: BatchScanExec => Seq(b)
-          case q: QueryStageExec => scans(q.plan)
-          case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        }.flatten
-      val plan = j.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      val factRows = scans(plan).filter(_.output.exists(_.name == "f_v"))
-        .map(_.metrics("numOutputRows").value)
-      assert(factRows.nonEmpty && factRows.sum <= 300,
-        s"fact scan read ${factRows.sum} rows — runtime bucket pruning " +
-          "did not fire (whole table = 2000)")
-    } finally saved match {
-      case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    (1L to 2000L).map(i => (i, i * 1.0)).toDF("k", "f_v")
+      .writeTo("graft_bkt.db.bf").using("parquet")
+      .partitionedBy(bucket(16, $"k")).createOrReplace()
+    (1L to 2000L by 400).map(k => (k, if (k == 401L) "x" else "y"))
+      .toDF("k", "cat")
+      .writeTo("graft_bkt.db.bd").using("parquet").createOrReplace()
+    val j = spark.table("graft_bkt.db.bf")
+      .join(spark.table("graft_bkt.db.bd").where($"cat" === "x"), Seq("k"))
+      .agg(count(lit(1)).as("n"), sum($"f_v").as("s"))
+    val row = j.collect().head
+    assert(row.getLong(0) == 1 && row.getDouble(1) == 401.0)
+    // the fact scan must have emitted only the one bucket directory
+    // k=401 hashes into (~2000/16 = 125 rows), not the whole table
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def scans(p: SparkPlan): Seq[BatchScanExec] =
+      p.collect {
+        case b: BatchScanExec => Seq(b)
+        case q: QueryStageExec => scans(q.plan)
+        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      }.flatten
+    val plan = j.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
     }
+    val factRows = scans(plan).filter(_.output.exists(_.name == "f_v"))
+      .map(_.metrics("numOutputRows").value)
+    assert(factRows.nonEmpty && factRows.sum <= 300,
+      s"fact scan read ${factRows.sum} rows — runtime bucket pruning " +
+        "did not fire (whole table = 2000)")
     spark.sql("DROP TABLE graft_bkt.db.bf")
     spark.sql("DROP TABLE graft_bkt.db.bd")
   }

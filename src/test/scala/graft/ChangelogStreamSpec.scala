@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The `.changes` metadata table (ChangelogRead.scala): the row-level
   * change feed as a batch relation AND a streaming source. Pins:
@@ -14,23 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoint-resume; a MoR merge commit serves its delete half from
   * the entry's narrowed scope; a COW rewrite commit fails pointedly;
   * unsupported options refuse pointedly. */
-class ChangelogStreamSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_chg_wh").toString
+class ChangelogStreamSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_chg")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_chg",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_chg.warehouse", warehouse)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graft_chg.db")
-    s
-  }
+  spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_chg.db")
 
   private def typedRows(df: DataFrame): Seq[(String, Long, String)] =
     df.select(col("_change_type"), col("k"), col("tag"))
@@ -111,7 +97,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
       .create()
     s.sql("ALTER TABLE graft_chg.db.c2 ADD CONSTRAINT c2_pk " +
       "PRIMARY KEY (k) NOT ENFORCED")
-    val ckpt = Files.createTempDirectory("graft_chg_ckpt").toString
+    val ckpt = tmpDir("graft_chg_ckpt").toString
     // drain 1: the stream starts BEFORE any change — the current
     // snapshot serves as inserts (Delta CDF's initial-snapshot rule)
     val first = drain("graft_chg.db.c2.changes", ckpt)
@@ -198,7 +184,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
     import s.implicits._
     s.range(10).select($"id".as("k"), lit("a").as("tag"))
       .repartition(2).writeTo("graft_chg.db.c4").create()
-    val ckpt = Files.createTempDirectory("graft_chg_ev_ck").toString
+    val ckpt = tmpDir("graft_chg_ev_ck").toString
     assert(drain("graft_chg.db.c4.changes", ckpt).size == 10)
     // the evolving commit hard-links every root file under _spec-0/
     // (zero rewrite) — the stream must neither die nor re-emit
@@ -222,7 +208,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
     s.sql("CALL graft_chg.system.create_branch('db.c3', 'audit')")
     s.range(100, 103).select($"id".as("k"), lit("b").as("tag"))
       .writeTo("graft_chg.db.`c3@audit`").append()
-    val ckpt = Files.createTempDirectory("graft_chg_br_ck").toString
+    val ckpt = tmpDir("graft_chg_br_ck").toString
     val first = drain("graft_chg.db.`c3@audit`.changes", ckpt)
     // the branch head's snapshot (10 main-forked + 3 branch-only rows)
     assert(first.size == 13, s"branch snapshot drain got ${first.size}")
@@ -252,7 +238,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
     import s.implicits._
     s.range(5).select($"id".as("k"), lit("a").as("tag"))
       .writeTo("graft_chg.db.c5").create()
-    val ckpt = Files.createTempDirectory("graft_chg_se_ck").toString
+    val ckpt = tmpDir("graft_chg_se_ck").toString
     assert(drain("graft_chg.db.c5.changes", ckpt).size == 5)
     // two commits while down: a pre-evolution append, then ALTER ADD
     // COLUMN + a post-evolution append — one resume spans both shapes
@@ -280,7 +266,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
       .partitionedBy($"p").create()
     s.sql("ALTER TABLE graft_chg.db.c7 ADD CONSTRAINT c7_pk " +
       "PRIMARY KEY (k) NOT ENFORCED")
-    val ckpt = Files.createTempDirectory("graft_chg_pt_ck").toString
+    val ckpt = tmpDir("graft_chg_pt_ck").toString
     val snap = drain("graft_chg.db.c7.changes", ckpt)
     assert(snap.size == 40 &&
       snap.forall(r => r.getInt(1) == (r.getLong(0) % 4).toInt),
@@ -306,14 +292,11 @@ class ChangelogStreamSpec extends AnyFunSuite {
     import s.implicits._
     // a dedicated short-retention catalog (history is read at catalog
     // init, not per query)
-    s.conf.set("spark.sql.catalog.graft_chr",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_chr.warehouse",
-      Files.createTempDirectory("graft_chr_wh").toString)
+    registerCatalog("graft_chr")
     s.conf.set("spark.sql.catalog.graft_chr.history", "2")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft_chr.db")
     s.range(3).select($"id".as("k")).writeTo("graft_chr.db.c6").create()
-    val ckpt = Files.createTempDirectory("graft_chg_rt_ck").toString
+    val ckpt = tmpDir("graft_chg_rt_ck").toString
     assert(drain("graft_chr.db.c6.changes", ckpt).size == 3)
     // three commits at history=2: the checkpointed base expires
     for (i <- 1 to 3)
@@ -334,10 +317,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
     // a deeper-history catalog: the resume below spans FOUR commits
     // past the checkpointed base (merge, rewrite_deletes, compact,
     // append), which the default history=3 window would expire
-    s.conf.set("spark.sql.catalog.graft_chm",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_chm.warehouse",
-      Files.createTempDirectory("graft_chm_wh").toString)
+    registerCatalog("graft_chm")
     s.conf.set("spark.sql.catalog.graft_chm.history", "10")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft_chm.db")
     s.range(50).select($"id".as("k"), concat(lit("v"), $"id" % 3).as("tag"))
@@ -346,7 +326,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
       .create()
     s.sql("ALTER TABLE graft_chm.db.c8 ADD CONSTRAINT c8_pk " +
       "PRIMARY KEY (k) NOT ENFORCED")
-    val ckpt = Files.createTempDirectory("graft_chg_mt_ck").toString
+    val ckpt = tmpDir("graft_chg_mt_ck").toString
     assert(drain("graft_chm.db.c8.changes", ckpt).size == 50)
     // a MoR merge (live entry), then rewrite_deletes MATERIALIZES it,
     // then compact rewrites every file — both content-preserving —
@@ -412,7 +392,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
         .table("graft_chg.db.c9.changes")
         .writeStream.format("noop")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_chg_old_ck").toString)
+          tmpDir("graft_chg_old_ck").toString)
         .start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -424,7 +404,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
         .table("graft_chg.db.c9.changes")
         .writeStream.format("noop")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_chg_ev_ck2").toString)
+          tmpDir("graft_chg_ev_ck2").toString)
         .start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -437,7 +417,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
         .table("graft_chg.db.c9.changes")
         .writeStream.format("noop")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_chg_et_ck").toString)
+          tmpDir("graft_chg_et_ck").toString)
         .start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -497,7 +477,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
     }
     assert(msgs(e3).exists(_.contains("OLDEST")), msgs(e3))
     // the STREAM from a2's instant: exactly a2's row, then it tails
-    val ck1 = Files.createTempDirectory("graft_chg_ts_ck1").toString
+    val ck1 = tmpDir("graft_chg_ts_ck1").toString
     val rows = {
       val acc = scala.collection.mutable.ArrayBuffer.empty[Row]
       val q = s.readStream.option("startingTimestamp", tsA2.toString)
@@ -513,7 +493,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
       s"stream from a2's instant must serve exactly a2: $rows")
     // a FUTURE instant tails from now: nothing at start, the next
     // commit serves (the stream reading of 'at or after ts')
-    val ck2 = Files.createTempDirectory("graft_chg_ts_ck2").toString
+    val ck2 = tmpDir("graft_chg_ts_ck2").toString
     def drainTs(): Seq[Row] = {
       val acc = scala.collection.mutable.ArrayBuffer.empty[Row]
       val q = s.readStream
@@ -549,7 +529,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
       .partitionedBy($"p").create()
     s.sql("ALTER TABLE graft_chg.db.c11 ADD CONSTRAINT c11_pk " +
       "PRIMARY KEY (k) NOT ENFORCED")
-    val ckpt = Files.createTempDirectory("graft_chg_tu_ck").toString
+    val ckpt = tmpDir("graft_chg_tu_ck").toString
     assert(drain("graft_chg.db.c11.changes", ckpt).size == 20)
     // pure-update MERGE carrying BOTH kinds: 2 updates + 2 inserts
     Seq((0L, 0, "u0"), (3L, 1, "u3"), (100L, 0, "new"), (101L, 1, "new"))
@@ -612,7 +592,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
     import s.implicits._
     s.range(10).select($"id".as("k"), lit("a").as("tag"))
       .repartition(3).writeTo("graft_chg.db.c15").create()
-    val ckpt = Files.createTempDirectory("graft_chg_bf_ck").toString
+    val ckpt = tmpDir("graft_chg_bf_ck").toString
     assert(drain("graft_chg.db.c15.changes", ckpt).size == 10)
     s.range(10, 14).select($"id".as("k"), lit("b").as("tag"))
       .writeTo("graft_chg.db.c15").append()
@@ -669,7 +649,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
     import s.implicits._
     s.range(30).select($"id".as("k"), lit("a").as("tag"))
       .repartition(3).writeTo("graft_chg.db.c12").create()
-    val ckpt = Files.createTempDirectory("graft_chg_mb_ck").toString
+    val ckpt = tmpDir("graft_chg_mb_ck").toString
     val before = {
       val acc = scala.collection.mutable.ArrayBuffer.empty[Row]
       val q = s.readStream.option("maxBytesPerTrigger", "1")
@@ -705,7 +685,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
       "PRIMARY KEY (k) NOT ENFORCED")
     s.range(0).select($"id".as("k"), lit("").as("tag"))
       .writeTo("graft_chg.db.c13_rep").create()
-    val ckpt = Files.createTempDirectory("graft_chg_tr_ck").toString
+    val ckpt = tmpDir("graft_chg_tr_ck").toString
     def apply(): Unit = {
       // Delta CDF's TYPED recipe: preimages are informational — drop
       // them; deletes DELETE; postimages and inserts UPSERT. No
@@ -792,7 +772,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
         .table("graft_chg.db.c1.changes")
         .writeStream.format("noop")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_chg_ck2").toString)
+          tmpDir("graft_chg_ck2").toString)
         .start()
       try q.processAllAvailable() finally q.stop()
     }

@@ -1,17 +1,9 @@
 package graft
 
 import graft.functions.CharNGrams.charNGrams
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class CharNGramsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CharNGramsSpec extends GraftSuite {
   test("generator output equals the transform+sequence+explode formulation") {
     import spark.implicits._
     // inputs all >= 5 chars: for SHORTER strings the built-in formulation

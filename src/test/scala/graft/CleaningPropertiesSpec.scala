@@ -1,24 +1,16 @@
 package graft
 
 import graft.medallion.Silver
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for the silver cleaning/bucketization library (SURVEY §5):
   * idempotence of the normalizers and totality of the bucketizers, evaluated
   * in one Spark pass over ScalaCheck-generated inputs (not one job per
   * sample).
   */
-class CleaningPropertiesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CleaningPropertiesSpec extends GraftSuite {
   private def samples[A](g: Gen[A], n: Int = 300): Seq[A] =
     Iterator.from(0)
       .flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))

@@ -2,10 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** `days(ts)` hidden time-transform partitioning on the atomic catalog —
   * the event-stream layout: rows land in `_gd_ts=<utc epoch day>`
@@ -14,22 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * round-trip (nulls included), runtime DAY pruning from a dim filter,
   * day-granular MERGE copy-on-write (untouched days hard-link), and
   * zero-exchange SPJ between two day-partitioned tables. */
-class DaysTransformSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_days_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_days",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_days.warehouse", warehouse)
-    s
-  }
+class DaysTransformSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_days")
 
   private def tblDir(name: String): java.nio.file.Path =
     java.nio.file.Paths.get(warehouse, "db", name)
@@ -96,46 +80,39 @@ class DaysTransformSpec extends AnyFunSuite {
   test("runtime day pruning: a dim filter's timestamps prune day dirs") {
     import spark.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_days.db")
-    val saved = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      eventsDf(400).writeTo("graft_days.db.evf").using("parquet")
-        .partitionedBy(days($"ts")).createOrReplace()
-      // dim: one ts per day boundary, only one marked
-      (0 to 99).toDF("d")
-        .select(((lit(1704067200L) + $"d" * 86400L) + 21600L)
-          .cast("timestamp").as("ts"),
-          when($"d" === 7, lit("x")).otherwise(lit("y")).as("cat"))
-        .writeTo("graft_days.db.evd").using("parquet").createOrReplace()
-      val j = spark.table("graft_days.db.evf")
-        .join(spark.table("graft_days.db.evd").where($"cat" === "x"),
-          Seq("ts"))
-        .agg(count(lit(1)).as("n"), sum($"v").as("s"))
-      val row = j.collect().head
-      // day 7's 06:00 tick is id = 7*4 + 1 = 29
-      assert(row.getLong(0) == 1 && row.getDouble(1) == 29 * 1.5, row)
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-      def scans(p: SparkPlan): Seq[BatchScanExec] =
-        p.collect {
-          case b: BatchScanExec => Seq(b)
-          case q: QueryStageExec => scans(q.plan)
-          case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        }.flatten
-      val plan = j.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      val factRows = scans(plan).filter(_.output.exists(_.name == "v"))
-        .map(_.metrics("numOutputRows").value)
-      assert(factRows.nonEmpty && factRows.sum <= 4,
-        s"fact scan read ${factRows.sum} rows — runtime day pruning did " +
-          "not fire (whole table = 400)")
-    } finally saved match {
-      case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    eventsDf(400).writeTo("graft_days.db.evf").using("parquet")
+      .partitionedBy(days($"ts")).createOrReplace()
+    // dim: one ts per day boundary, only one marked
+    (0 to 99).toDF("d")
+      .select(((lit(1704067200L) + $"d" * 86400L) + 21600L)
+        .cast("timestamp").as("ts"),
+        when($"d" === 7, lit("x")).otherwise(lit("y")).as("cat"))
+      .writeTo("graft_days.db.evd").using("parquet").createOrReplace()
+    val j = spark.table("graft_days.db.evf")
+      .join(spark.table("graft_days.db.evd").where($"cat" === "x"),
+        Seq("ts"))
+      .agg(count(lit(1)).as("n"), sum($"v").as("s"))
+    val row = j.collect().head
+    // day 7's 06:00 tick is id = 7*4 + 1 = 29
+    assert(row.getLong(0) == 1 && row.getDouble(1) == 29 * 1.5, row)
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def scans(p: SparkPlan): Seq[BatchScanExec] =
+      p.collect {
+        case b: BatchScanExec => Seq(b)
+        case q: QueryStageExec => scans(q.plan)
+        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      }.flatten
+    val plan = j.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
     }
+    val factRows = scans(plan).filter(_.output.exists(_.name == "v"))
+      .map(_.metrics("numOutputRows").value)
+    assert(factRows.nonEmpty && factRows.sum <= 4,
+      s"fact scan read ${factRows.sum} rows — runtime day pruning did " +
+        "not fire (whole table = 400)")
     spark.sql("DROP TABLE graft_days.db.evd")
   }
 
@@ -217,10 +194,8 @@ class DaysTransformSpec extends AnyFunSuite {
     eventsDf(80).select($"ts", ($"v" * 2).as("b_v"))
       .writeTo("graft_days.db.spd_b").using("parquet")
       .partitionedBy(days($"ts")).createOrReplace()
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "true")
-    try {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true") {
       val j = spark.table("graft_days.db.spd_a")
         .join(spark.table("graft_days.db.spd_b"), Seq("ts"))
         .select($"ts", ($"a_v" + $"b_v").as("s"))
@@ -233,8 +208,6 @@ class DaysTransformSpec extends AnyFunSuite {
       assert(j.count() == 80 &&
         j.agg(sum($"s")).collect().head.getDouble(0) ==
           (1 to 80).map(_ * 1.5 * 3).sum)
-    } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
     }
     spark.sql("DROP TABLE graft_days.db.spd_a")
     spark.sql("DROP TABLE graft_days.db.spd_b")

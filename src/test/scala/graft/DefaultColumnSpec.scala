@@ -2,9 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** DEFAULT column values on the atomic catalog — metadata-only schema
   * evolution: `ALTER TABLE ADD COLUMN x DEFAULT v` commits a snapshot
   * whose data files are all HARD LINKS of the prior version (zero
@@ -12,22 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * inserts that omit the column get CURRENT_DEFAULT filled by the
   * analyzer, and `ALTER COLUMN SET DEFAULT` changes only FUTURE
   * inserts — history keeps reading the add-time value. */
-class DefaultColumnSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_dc_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_dc",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_dc.warehouse", warehouse)
-    s
-  }
+class DefaultColumnSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_dc")
 
   test("ADD COLUMN DEFAULT: old files read the default, zero rewrite") {
     import spark.implicits._

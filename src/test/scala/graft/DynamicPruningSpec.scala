@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Dynamic partition pruning for NORMAL reads of partitioned catalog
   * tables — the star-schema path: a selective filter on a joined dim
@@ -13,40 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * predicate on the fact side. The proof is the fact scan's OUTPUT ROW
   * COUNT: with pruning it emits only the matching partitions' rows;
   * without, the whole table. */
-class DynamicPruningSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_dpp_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_dpp",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_dpp.warehouse", warehouse)
-    s
-  }
-
-  /** Pin the confs DPP depends on for the duration of a test — the
-    * suites share one SparkSession, and e.g. BucketedJoinSpec disables
-    * auto-broadcast session-wide (DPP's default onlyInBroadcast mode
-    * never fires without a broadcast dim). */
-  private def withDppConfs[A](f: => A): A = {
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.optimizer.dynamicPartitionPruning.enabled")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled",
-      "true")
-    try f finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+class DynamicPruningSpec extends GraftSuite {
+  registerCatalog("graft_dpp")
 
   private def finalPlan(p: SparkPlan): SparkPlan = p match {
     case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -72,7 +38,6 @@ class DynamicPruningSpec extends AnyFunSuite {
 
   test("a selective dim filter prunes fact partitions at runtime") {
     import spark.implicits._
-    withDppConfs {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_dpp.db")
     (1L to 1000L).map(i => (i % 10, i, i * 1.0)).toDF("k", "f_id", "f_v")
       .writeTo("graft_dpp.db.fact").using("parquet")
@@ -95,12 +60,10 @@ class DynamicPruningSpec extends AnyFunSuite {
     assert(factRows.sum == 200,
       s"fact scan read ${factRows.sum} rows — dynamic partition pruning " +
         "did not fire (expected 200 = the two matching partitions)")
-    }
   }
 
   test("pruned delegate replays pushed data filters and column pruning") {
     import spark.implicits._
-    withDppConfs {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_dpp.db")
     (1L to 1000L).map(i => (i % 10, i, i * 1.0, s"pad$i"))
       .toDF("k", "f_id", "f_v", "f_pad")
@@ -121,7 +84,6 @@ class DynamicPruningSpec extends AnyFunSuite {
     assert(factRows.nonEmpty && factRows.sum <= 100,
       s"fact2 scan read ${factRows.sum} rows — expected at most one " +
         "partition's 100 rows after runtime pruning")
-    }
   }
 
   test("SPJ and DPP compose: v2 bucketing on, dim filter still prunes") {
@@ -133,20 +95,16 @@ class DynamicPruningSpec extends AnyFunSuite {
     (0L to 9L).map(k => (k, if (k == 2 || k == 5) "x" else "y"))
       .toDF("k", "cat")
       .writeTo("graft_dpp.db.cdim").using("parquet").createOrReplace()
-    withDppConfs {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      try {
-        val j = spark.table("graft_dpp.db.cfact")
-          .join(spark.table("graft_dpp.db.cdim").where($"cat" === "x"),
-            Seq("k"))
-          .agg(count(lit(1)).as("n"), sum($"c_v").as("s"))
-        assert(j.collect().head.getLong(0) == 200)
-        val factRows = scanRows(j, "c_v")
-        assert(factRows.nonEmpty && factRows.sum == 200,
-          s"key-grouped fact scan read ${factRows.sum} rows — runtime " +
-            "pruning did not compose with storage partitioning")
-      } finally spark.conf
-        .set("spark.sql.sources.v2.bucketing.enabled", "false")
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true") {
+      val j = spark.table("graft_dpp.db.cfact")
+        .join(spark.table("graft_dpp.db.cdim").where($"cat" === "x"),
+          Seq("k"))
+        .agg(count(lit(1)).as("n"), sum($"c_v").as("s"))
+      assert(j.collect().head.getLong(0) == 200)
+      val factRows = scanRows(j, "c_v")
+      assert(factRows.nonEmpty && factRows.sum == 200,
+        s"key-grouped fact scan read ${factRows.sum} rows — runtime " +
+          "pruning did not compose with storage partitioning")
     }
     spark.sql("DROP TABLE graft_dpp.db.cfact")
     spark.sql("DROP TABLE graft_dpp.db.cdim")
@@ -155,66 +113,62 @@ class DynamicPruningSpec extends AnyFunSuite {
   test("composite (days, bucket) spec: a dim filter prunes bucket cells " +
       "at runtime even with the time column pruned from the scan") {
     import spark.implicits._
-    withDppConfs {
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_dpp.db")
-      // 4 days x 4 buckets; keys 0..15, one day per 4 keys, 100 rows/key
-      (0 until 1600).map { i =>
-        val k = i % 16
-        (k.toLong, new java.sql.Timestamp(1704067200000L +
-          (k / 4) * 86400000L), i.toLong * 2)
-      }.toDF("u", "ts", "val")
-        .writeTo("graft_dpp.db.comp").using("parquet")
-        .partitionedBy(days($"ts"), bucket(4, $"u")).createOrReplace()
-      (0L to 15L).map(u => (u, if (u == 3) "x" else "y")).toDF("u", "cat")
-        .writeTo("graft_dpp.db.compdim").using("parquet").createOrReplace()
-      // the query never touches ts: the scan prunes the time column
-      // away, filterAttributes must still resolve (u survives), and
-      // the runtime filter keeps only u=3's bucket within each day
-      val j = spark.table("graft_dpp.db.comp").select($"u", $"val")
-        .join(spark.table("graft_dpp.db.compdim").where($"cat" === "x"),
-          Seq("u"))
-        .agg(count(lit(1)).as("n"), sum($"val").as("s"))
-      val row = j.collect().head
-      assert(row.getLong(0) == 100)
-      assert(row.getLong(1) ==
-        (0 until 1600).filter(_ % 16 == 3).map(_.toLong * 2).sum)
-      // exact pin: the filter keeps exactly bucket(3)'s id at the
-      // bucket level (the day level cannot prune on u), so the scan
-      // reads precisely the keys sharing key 3's bucket — computed
-      // with the same codegen'd hash the write router used
-      val b3 = spark.range(0, 16)
-        .select($"id", pmod(hash($"id"), lit(4)).as("b")).collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val expected = (0L to 15L).count(k => b3(k) == b3(3L)) * 100L
-      assert(expected < 1600, "degenerate hash layout — test is vacuous")
-      val factRows = scanRows(j, "val")
-      assert(factRows.nonEmpty && factRows.sum == expected,
-        s"composite fact scan read ${factRows.sum} rows, expected " +
-          s"$expected — runtime bucket pruning did not fire on the " +
-          "(days, bucket) layout")
-      spark.sql("DROP TABLE graft_dpp.db.comp")
-      spark.sql("DROP TABLE graft_dpp.db.compdim")
-    }
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_dpp.db")
+    // 4 days x 4 buckets; keys 0..15, one day per 4 keys, 100 rows/key
+    (0 until 1600).map { i =>
+      val k = i % 16
+      (k.toLong, new java.sql.Timestamp(1704067200000L +
+        (k / 4) * 86400000L), i.toLong * 2)
+    }.toDF("u", "ts", "val")
+      .writeTo("graft_dpp.db.comp").using("parquet")
+      .partitionedBy(days($"ts"), bucket(4, $"u")).createOrReplace()
+    (0L to 15L).map(u => (u, if (u == 3) "x" else "y")).toDF("u", "cat")
+      .writeTo("graft_dpp.db.compdim").using("parquet").createOrReplace()
+    // the query never touches ts: the scan prunes the time column
+    // away, filterAttributes must still resolve (u survives), and
+    // the runtime filter keeps only u=3's bucket within each day
+    val j = spark.table("graft_dpp.db.comp").select($"u", $"val")
+      .join(spark.table("graft_dpp.db.compdim").where($"cat" === "x"),
+        Seq("u"))
+      .agg(count(lit(1)).as("n"), sum($"val").as("s"))
+    val row = j.collect().head
+    assert(row.getLong(0) == 100)
+    assert(row.getLong(1) ==
+      (0 until 1600).filter(_ % 16 == 3).map(_.toLong * 2).sum)
+    // exact pin: the filter keeps exactly bucket(3)'s id at the
+    // bucket level (the day level cannot prune on u), so the scan
+    // reads precisely the keys sharing key 3's bucket — computed
+    // with the same codegen'd hash the write router used
+    val b3 = spark.range(0, 16)
+      .select($"id", pmod(hash($"id"), lit(4)).as("b")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val expected = (0L to 15L).count(k => b3(k) == b3(3L)) * 100L
+    assert(expected < 1600, "degenerate hash layout — test is vacuous")
+    val factRows = scanRows(j, "val")
+    assert(factRows.nonEmpty && factRows.sum == expected,
+      s"composite fact scan read ${factRows.sum} rows, expected " +
+        s"$expected — runtime bucket pruning did not fire on the " +
+        "(days, bucket) layout")
+    spark.sql("DROP TABLE graft_dpp.db.comp")
+    spark.sql("DROP TABLE graft_dpp.db.compdim")
   }
 
   test("a partitioned catalog table still broadcasts (stats forwarded)") {
     import spark.implicits._
-    withDppConfs {
-      // the PARTITIONED side is tiny (1000 rows): if the scan wrapper
-      // hid the parquet size estimate, the relation would report the
-      // default (huge) size and the planner would never broadcast it
-      val big = spark.range(0, 100000).select(($"id" % 10).as("k"), $"id")
-      val joined = big.join(spark.table("graft_dpp.db.fact"), Seq("k"))
-      assert(joined.count() == 100000L / 10 * 1000)
-      val plan = finalPlan(joined.queryExecution.executedPlan)
-      val hasBhj = plan.toString.contains("BroadcastHashJoin") ||
-        plan.collect {
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            q.plan.toString
-        }.exists(_.contains("BroadcastHashJoin"))
-      assert(hasBhj,
-        s"small partitioned catalog table did not broadcast:\n$plan")
-    }
+    // the PARTITIONED side is tiny (1000 rows): if the scan wrapper
+    // hid the parquet size estimate, the relation would report the
+    // default (huge) size and the planner would never broadcast it
+    val big = spark.range(0, 100000).select(($"id" % 10).as("k"), $"id")
+    val joined = big.join(spark.table("graft_dpp.db.fact"), Seq("k"))
+    assert(joined.count() == 100000L / 10 * 1000)
+    val plan = finalPlan(joined.queryExecution.executedPlan)
+    val hasBhj = plan.toString.contains("BroadcastHashJoin") ||
+      plan.collect {
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          q.plan.toString
+      }.exists(_.contains("BroadcastHashJoin"))
+    assert(hasBhj,
+      s"small partitioned catalog table did not broadcast:\n$plan")
   }
 
   test("no-dim-filter join is unchanged and correct (no pruning needed)") {

@@ -2,11 +2,9 @@ package graft
 
 import graft.api.Graft
 import graft.functions.SortedSetOverlap
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for the custom expressions: SortedSetOverlap's merge
   * counts must equal reference Set arithmetic on arbitrary inputs under
@@ -14,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * de-interleavable (each input's low bits recoverable from the z-value).
   * All samples evaluate in ONE Spark pass per property.
   */
-class ExpressionPropertiesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ExpressionPropertiesSpec extends GraftSuite {
   private def samples[A](g: Gen[A], n: Int = 300): Seq[A] =
     Iterator.from(0)
       .flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** FILE-LEVEL DATA SKIPPING (FileStats.scala): footer min/max stats are
   * recorded at commit and consulted at scan planning, so a selective
@@ -13,27 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * conservative keeps for statless files, null-test semantics, and —
   * the one that guards correctness of the whole catalog — row-level
   * COW rewrites never lose carried rows to skipping. */
-class FileSkippingSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_fsk_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // this suite measures SCAN-level skipping: pin the shared
-    // session's aggregate pushdown OFF so another suite's
-    // builder-level leak cannot reroute its counts to the
-    // metadata path (same defense PlanQualitySpec carries)
-    s.conf.set("spark.sql.parquet.aggregatePushdown", "false")
-    s.conf.set("spark.sql.catalog.graft_fsk",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_fsk.warehouse", warehouse)
-    s
-  }
+class FileSkippingSpec extends GraftSuite {
+  registerCatalog("graft_fsk")
 
   private def counts(tbl: String): (Int, Int) =
     Option(graft.sources.FileSkippingScan.counts.get(s"db.$tbl"))
@@ -68,15 +47,14 @@ class FileSkippingSpec extends AnyFunSuite {
   test("skipping off → same rows, all files planned") {
     val s = spark
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft.read.fileSkipping", "false")
-    try {
+    withConf("spark.sql.catalog.graft.read.fileSkipping" -> "false") {
       graft.sources.FileSkippingScan.counts.clear()
       val got = s.table("graft_fsk.db.sorted")
         .where($"k" >= 2000L && $"k" < 3000L).agg(count(lit(1))).head.getLong(0)
       assert(got === 1000L)
       assert(counts("sorted") === ((-1, -1)),
         "no skipping scan should have been planned with the conf off")
-    } finally s.conf.unset("spark.sql.catalog.graft.read.fileSkipping")
+    }
   }
 
   test("appended overlapping files get their own stats and stay kept") {
@@ -348,9 +326,9 @@ class FileSkippingSpec extends AnyFunSuite {
       "survivor files stay as sharp as a fresh append") {
     val s = spark
     mkSorted("msort2")
-    s.conf.set("spark.sql.catalog.graft.write.deleteMode", "merge-on-read")
-    try s.sql("DELETE FROM graft_fsk.db.msort2 WHERE k >= 2100 AND k < 2200")
-    finally s.conf.unset("spark.sql.catalog.graft.write.deleteMode")
+    withConf("spark.sql.catalog.graft.write.deleteMode" -> "merge-on-read") {
+      s.sql("DELETE FROM graft_fsk.db.msort2 WHERE k >= 2100 AND k < 2200")
+    }
     s.sql("CALL graft_fsk.system.rewrite_deletes('db.msort2')").collect()
     assert(s.table("graft_fsk.db.msort2").count() === 7900L)
     val (got, kept, total) = rangeKept("msort2")

@@ -1,22 +1,13 @@
 package graft
 
 import graft.api.Graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The public API must be table-agnostic: every function is exercised here
   * on hand-built frames with caller-chosen column names (not the testdata
   * schemas the gate queries bind to).
   */
-class GraftApiSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GraftApiSpec extends GraftSuite {
   test("minhash + nearDupPairs + jaccardVerify find a planted near-dup") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again"
@@ -491,27 +482,22 @@ class GraftApiSpec extends AnyFunSuite {
     // the cluster-posture mode: rounds materialize through a reliable
     // checkpoint dir instead of executor-resident localCheckpoint blocks;
     // results must be bit-identical in both modes
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    try {
-      val edges = ((1L to 16L).map(i => (i, i + 1)) ++ Seq((30L, 31L)))
-        .toDF("a", "b")
-      val local = Graft.connectedComponents(edges, $"a", $"b")
-        .as[(Long, Long)].collect().toMap
-      val reliable = Graft.connectedComponents(edges, $"a", $"b",
-        checkpointDir = Some(dir)).as[(Long, Long)].collect().toMap
-      assert(local == reliable, s"CC diverged: $local vs $reliable")
-      val prLocal = Graft.pageRank(edges, $"a", $"b", iters = 3)
-        .as[(Long, Double)].collect().toMap
-      val prReliable = Graft.pageRank(edges, $"a", $"b", iters = 3,
-        checkpointDir = Some(dir)).as[(Long, Double)].collect().toMap
-      assert(prLocal == prReliable, "pageRank diverged across modes")
-      // the reliable mode actually wrote RDD checkpoint data to the dir
-      assert(new java.io.File(dir).listFiles.nonEmpty,
-        "reliable mode left no checkpoint data")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively()
-    }
+    val dir = tmpDir("graft_ckpt").toString
+    val edges = ((1L to 16L).map(i => (i, i + 1)) ++ Seq((30L, 31L)))
+      .toDF("a", "b")
+    val local = Graft.connectedComponents(edges, $"a", $"b")
+      .as[(Long, Long)].collect().toMap
+    val reliable = Graft.connectedComponents(edges, $"a", $"b",
+      checkpointDir = Some(dir)).as[(Long, Long)].collect().toMap
+    assert(local == reliable, s"CC diverged: $local vs $reliable")
+    val prLocal = Graft.pageRank(edges, $"a", $"b", iters = 3)
+      .as[(Long, Double)].collect().toMap
+    val prReliable = Graft.pageRank(edges, $"a", $"b", iters = 3,
+      checkpointDir = Some(dir)).as[(Long, Double)].collect().toMap
+    assert(prLocal == prReliable, "pageRank diverged across modes")
+    // the reliable mode actually wrote RDD checkpoint data to the dir
+    assert(new java.io.File(dir).listFiles.nonEmpty,
+      "reliable mode left no checkpoint data")
   }
 
   test("dedupCorpus rejects a signature/banding mismatch loudly") {

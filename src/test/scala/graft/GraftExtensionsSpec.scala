@@ -3,15 +3,8 @@ package graft
 import graft.plans.{FuseDotProduct, GraftExtensions}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class GraftExtensionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GraftExtensionsSpec extends GraftSuite {
   private def foldDot = {
     aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
       lit(0.0), (acc, x) => acc + x)
@@ -32,12 +25,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("extensions-enabled session applies the fusion during optimization") {
+    // the fixture's session starts the context; with the active and
+    // default sessions cleared, the builder makes a second session on it
+    val shared = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {
@@ -49,8 +42,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
         df.queryExecution.optimizedPlan.toString)
       assert(df.collect().map(_.getDouble(0)).toSeq == Seq(3.0, 5.0, 7.0, 9.0, 11.0))
     } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+      // hand the shared session back to every later suite
+      SparkSession.setActiveSession(shared)
+      SparkSession.setDefaultSession(shared)
     }
   }
 }

@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** IDENTITY COLUMNS on the atomic catalog (`GENERATED { ALWAYS | BY
   * DEFAULT } AS IDENTITY`): the spec survives CREATE into the table
   * schema, omitted values are connector-allocated — unique,
@@ -14,22 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * above them, merge-inserted nulls are refused pointedly, and a
   * racing identity append CONFLICTS instead of rebasing (overlapping
   * allocations). */
-class IdentityColumnSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_ic_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_ic",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_ic.warehouse", warehouse)
-    s
-  }
+class IdentityColumnSpec extends GraftSuite {
+  registerCatalog("graft_ic")
 
   test("GENERATED ALWAYS: values allocate from start, unique, ascending") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_ic.db")

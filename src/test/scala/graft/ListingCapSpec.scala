@@ -2,9 +2,7 @@ package graft
 
 import graft.medallion.{Maintenance, MdpConfig, Pipeline}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.metrics.source.HiveCatalogMetrics
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The medallion's reads of a partitioned catalog table list its
   * directories in a Spark job once there are more than
@@ -12,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * at one task per directory; the medallion entries cap it at the
   * session's cores for their duration and then restore the session's
   * setting. */
-class ListingCapSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ListingCapSpec extends GraftSuite {
   private val Key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
   /** Task counts of every stage of every partition-listing job. */
@@ -62,7 +53,7 @@ class ListingCapSpec extends AnyFunSuite {
 
   test("gold and silverIncremental list silver's directories in at most " +
       "defaultParallelism tasks and restore the session's listing parallelism") {
-    val base = TempDirs.create("graft_listing").toString
+    val base = tmpDir("graft_listing").toString
     val cfg = MdpConfig.fromEnv(base).copy(
       ingestGb = 0.001, payloadKb = 1, partitions = 4)
     Seq(cfg.silverFqn, cfg.goldFqn).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))

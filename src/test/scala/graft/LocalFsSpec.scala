@@ -9,15 +9,13 @@ import graft.fs.NioLocalFileSystem
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** `file:` is served by [[NioLocalFileSystem]], which sets modes without
   * forking `chmod`. Every mode it leaves must equal the one Hadoop's own
   * forking `RawLocalFileSystem.setPermission` leaves on the same inputs:
   * each case runs on both, in sibling directories, and compares the full
   * `unix:mode` of every path either one wrote. */
-class LocalFsSpec extends AnyFunSuite {
+class LocalFsSpec extends GraftSuite {
 
   private def oct(s: String): Int = Integer.parseInt(s, 8)
 
@@ -36,7 +34,7 @@ class LocalFsSpec extends AnyFunSuite {
     * tree's relative path -> mode. */
   private def both(setup: JPath => Unit)(ops: (FileSystem, Path) => Unit)
       : (Map[String, String], Map[String, String]) = {
-    val root = TempDirs.create("graft_localfs")
+    val root = tmpDir("graft_localfs")
     def run(fs: FileSystem, name: String): Map[String, String] = {
       val dir = root.resolve(name)
       Files.createDirectory(dir)
@@ -64,11 +62,9 @@ class LocalFsSpec extends AnyFunSuite {
     assert(FileSystem.getFileSystemClass("file", fresh) == classOf[NioLocalFileSystem])
     assert(FileSystem.newInstance(URI.create("file:///"), fresh)
       .isInstanceOf[NioLocalFileSystem])
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
     val hc = spark.sparkContext.hadoopConfiguration
     assert(FileSystem.get(URI.create("file:///"), hc).isInstanceOf[NioLocalFileSystem])
-    assert(new Path(TempDirs.create("graft_localfs").toUri)
+    assert(new Path(tmpDir("graft_localfs").toUri)
       .getFileSystem(spark.sessionState.newHadoopConf()).isInstanceOf[NioLocalFileSystem])
   }
 
@@ -128,7 +124,7 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("a created file keeps its .crc sibling and reads back checksummed") {
-    val dir = TempDirs.create("graft_localfs")
+    val dir = tmpDir("graft_localfs")
     val fs = FileSystem.newInstance(URI.create("file:///"), conf)
     try {
       val p = new Path(dir.toUri.toString, "data.bin")

@@ -1,28 +1,13 @@
 package graft
 
 import graft.medallion.{BronzeGen, Maintenance, MdpConfig, Pipeline, Silver}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Table-maintenance operators: incremental silver, partition-scoped
   * upsert, and small-file compaction — each checked for exact data
   * equivalence with the full-rebuild result, not just row counts.
   */
-class MaintenanceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_maint_$tag")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
+class MaintenanceSpec extends GraftSuite {
   private val Epoch = 1754982000L
 
   /** The medallion table names are global catalog state shared across
@@ -38,7 +23,7 @@ class MaintenanceSpec extends AnyFunSuite {
   test("silverIncremental over new bronze days equals a full rebuild") {
     import spark.implicits._
     dropMedallionTables()
-    val base = tmpDir("incr")
+    val base = tmpDir("graft_maint_incr").toString
     val cfg = MdpConfig.fromEnv(base).copy(
       ingestGb = 0.001, payloadKb = 1, partitions = 4)
 
@@ -76,7 +61,7 @@ class MaintenanceSpec extends AnyFunSuite {
   test("gold reflects silver-incremental rows through the shared silver table") {
     import spark.implicits._
     dropMedallionTables()
-    val base = tmpDir("chain")
+    val base = tmpDir("graft_maint_chain").toString
     val cfg = MdpConfig.fromEnv(base).copy(
       ingestGb = 0.001, payloadKb = 1, partitions = 4)
     val all = BronzeGen.generate(spark, 2000, 4, cfg.payloadKb, cfg.seed, Epoch)
@@ -110,7 +95,7 @@ class MaintenanceSpec extends AnyFunSuite {
   test("goldIncremental refreshes only new dates yet equals a full rebuild") {
     import spark.implicits._
     dropMedallionTables()
-    val base = tmpDir("goldincr")
+    val base = tmpDir("graft_maint_goldincr").toString
     val cfg = MdpConfig.fromEnv(base).copy(
       ingestGb = 0.001, payloadKb = 1, partitions = 4)
     val all = BronzeGen.generate(spark, 2000, 4, cfg.payloadKb, cfg.seed, Epoch)
@@ -203,7 +188,7 @@ class MaintenanceSpec extends AnyFunSuite {
 
   test("rollback drops gold+silver (tables and files) and a rebuild restores gold exactly") {
     dropMedallionTables()
-    val base = tmpDir("rollback")
+    val base = tmpDir("graft_maint_rollback").toString
     val cfg = MdpConfig.fromEnv(base).copy(
       ingestGb = 0.001, payloadKb = 1, partitions = 4)
     Pipeline.bronze(spark, cfg)
@@ -233,7 +218,7 @@ class MaintenanceSpec extends AnyFunSuite {
 
   test("upsertPartitioned replaces keys in touched partitions and appends new ones") {
     import spark.implicits._
-    val path = tmpDir("upsert") + "/t"
+    val path = tmpDir("graft_maint_upsert").toString + "/t"
     Seq((1L, "a", "2026-01-01"), (2L, "b", "2026-01-01"), (3L, "c", "2026-01-02"))
       .toDF("k", "v", "day")
       .write.partitionBy("day").parquet(path)
@@ -253,7 +238,7 @@ class MaintenanceSpec extends AnyFunSuite {
 
   test("compact merges small files and preserves the data exactly") {
     import spark.implicits._
-    val path = tmpDir("compact") + "/t"
+    val path = tmpDir("graft_maint_compact").toString + "/t"
     // 40 tiny files across 2 partitions
     (1 to 200).map(i => (i.toLong, s"row$i", s"p${i % 2}")).toDF("k", "v", "part")
       .repartition(20)

@@ -1,18 +1,9 @@
 package graft
 
 import graft.medallion.{BronzeGen, Gold, Silver}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class MedallionSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MedallionSpec extends GraftSuite {
   private val epoch = 1754982000L // fixed generation clock
   private lazy val bronze =
     BronzeGen.generate(spark, 2000, 4, 1, seed = 42, baseEpochS = epoch).cache()

@@ -1,9 +1,7 @@
 package graft
 
 import graft.functions.{CharNGrams, Md5Int60, MinHashSig}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused one-pass MinHash expression must be value-identical to the
   * composable formulation it replaced (CharNGrams explode -> md5-int60 ->
@@ -11,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dedup oracles re-derive, so this equivalence is what keeps d02/d03/
   * d06/d07 hash-matching.
   */
-class MinHashSigSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MinHashSigSpec extends GraftSuite {
   private val P = graft.api.Graft.MinhashP
   private val params = graft.api.Graft.minhashParams(8, 777L).toSeq
 

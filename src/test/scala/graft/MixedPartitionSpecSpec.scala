@@ -2,10 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** MULTI-FIELD partition specs mixing transforms — the composite
   * layouts a real lakehouse runs: `(days(ts), bucket(n, key))` is
@@ -16,22 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * directory), multi-key SPJ (join on BOTH source columns with zero
   * exchanges), identity+transform mixes, and MERGE pruning across the
   * composite layout. */
-class MixedPartitionSpecSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_mix_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_mx",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_mx.warehouse", warehouse)
-    s
-  }
+class MixedPartitionSpecSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_mx")
 
   private def tblDir(name: String): java.nio.file.Path =
     java.nio.file.Paths.get(warehouse, "db", name)
@@ -115,13 +99,9 @@ class MixedPartitionSpecSpec extends AnyFunSuite {
     evDf.select($"k", $"ts", ($"v" * 2).as("w"))
       .writeTo("graft_mx.db.ev2").using("parquet")
       .partitionedBy(days($"ts"), bucket(4, $"k")).createOrReplace()
-    val saved = (spark.conf.get("spark.sql.sources.v2.bucketing.enabled"),
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("graft_mx.db.ev")
         .join(spark.table("graft_mx.db.ev2"), Seq("ts", "k"))
         .agg(count(lit(1)).as("n"), sum($"v" + $"w").as("s"))
@@ -133,9 +113,6 @@ class MixedPartitionSpecSpec extends AnyFunSuite {
       }
       assert(shuffles.isEmpty,
         s"multi-key SPJ must plan zero exchanges, found ${shuffles.size}")
-    } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", saved._1)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved._2)
     }
     spark.sql("DROP TABLE graft_mx.db.ev2")
   }

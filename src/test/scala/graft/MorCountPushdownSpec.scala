@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** DELETE-AWARE COUNT(*) PUSHDOWN (KeyGroupedScan.scala /
   * MorDeletes.DeleteEntry.matched): a table with LIVE merge-on-read
@@ -16,24 +15,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * O(metadata) deleteWhere entry (count unknowable without a read)
   * REFUSES back to the scan path, MIN/MAX keep refusing while any
   * entry lives, and the kill-switch forces the scan path. */
-class MorCountPushdownSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_cnt_wh").toString
+class MorCountPushdownSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_cnt")
+  spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cnt.db")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_cnt",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_cnt.warehouse", warehouse)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cnt.db")
-    s
-  }
+  /** Every test here reads counts through aggregate pushdown. */
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.parquet.aggregatePushdown" -> "true")(super.withFixture(test))
 
   private def countDf(tbl: String): DataFrame =
     spark.sql(s"SELECT count(*) AS n FROM graft_cnt.db.$tbl")
@@ -94,9 +82,9 @@ class MorCountPushdownSpec extends AnyFunSuite {
             |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
     assertMetadataServed("c1", 900L)
     // the answers above agree with the row scan (kill-switch)
-    s.conf.set("spark.sql.catalog.graft.read.morAggPushdown", "false")
-    try assertScanServed("c1", 900L)
-    finally s.conf.unset("spark.sql.catalog.graft.read.morAggPushdown")
+    withConf("spark.sql.catalog.graft.read.morAggPushdown" -> "false") {
+      assertScanServed("c1", 900L)
+    }
   }
 
   test("a CONSUMED conjunct never reaches the inner parquet scan: a " +
@@ -265,14 +253,12 @@ class MorCountPushdownSpec extends AnyFunSuite {
     assert(filtered.collect()(0).getLong(0) === expected)
     // the kill switch takes the whole consumption with it: the scan
     // path re-applies the filter as rows and agrees
-    s.conf.set("spark.sql.catalog.graft.read.morAggPushdown", "false")
-    try {
+    withConf("spark.sql.catalog.graft.read.morAggPushdown" -> "false") {
       val scanned = s.sql("SELECT count(*) AS n FROM graft_cnt.db.cp1 " +
         "WHERE d >= DATE '1994-01-01'")
       assert(!planOf(scanned).contains("LocalTableScan"))
       assert(scanned.collect()(0).getLong(0) === expected)
-    } finally s.conf
-      .unset("spark.sql.catalog.graft.read.morAggPushdown")
+    }
     // a wider window that still contains the whole entry scope serves
     // from metadata too
     val wider = s.sql("SELECT count(*) AS n FROM graft_cnt.db.cp1 " +
@@ -381,15 +367,13 @@ class MorCountPushdownSpec extends AnyFunSuite {
     assert(sel.collect().map(_.getLong(0)).sorted === (200L until 600L),
       "consumed filtered SELECT must return exactly the matching rows")
     // opt-OUT: the kill switch restores the scan path, same answer
-    s.conf.set("spark.sql.catalog.graft.read.cleanCountPruning", "false")
-    try {
+    withConf("spark.sql.catalog.graft.read.cleanCountPruning" -> "false") {
       val off = s.sql("SELECT count(*) AS n FROM graft_cnt.db.cp4 " +
         "WHERE d >= DATE '1993-01-01'")
       assert(!planOf(off).contains("LocalTableScan"),
         s"the opt-out must restore the scan:\n${planOf(off)}")
       assert(off.collect()(0).getLong(0) === 400L)
-    } finally s.conf
-      .unset("spark.sql.catalog.graft.read.cleanCountPruning")
+    }
   }
 
   test("an equality entry STRADDLING the pruned boundary refuses to " +
@@ -527,13 +511,12 @@ class MorCountPushdownSpec extends AnyFunSuite {
     assert(row.getDouble(1) === expSum.toDouble / expCnt)
     assert(row.getLong(2) === (0L until 1000L).sum)
     // the kill switch agrees with the scan
-    s.conf.set("spark.sql.catalog.graft.read.morAggPushdown", "false")
-    try {
+    withConf("spark.sql.catalog.graft.read.morAggPushdown" -> "false") {
       val scan = s.sql("SELECT sum(n) AS sn, avg(n) AS an, sum(k) AS sk " +
         "FROM graft_cnt.db.cs1")
       assert(!planOf(scan).contains("LocalTableScan"))
       assert(scan.collect()(0).toSeq === row.toSeq)
-    } finally s.conf.unset("spark.sql.catalog.graft.read.morAggPushdown")
+    }
     // a PRUNED sum: the consumed filter restricts to all-rows-match
     // files, whose harvested sums are exact contributions
     val pruned = s.sql("SELECT sum(k) AS sk FROM graft_cnt.db.cs1 " +
@@ -577,11 +560,11 @@ class MorCountPushdownSpec extends AnyFunSuite {
     // catalyst's in both plans — morSum itself never risks them
     val ap = s.sql("SELECT avg(price) AS ap FROM graft_cnt.db.cs2")
     assert(planOf(ap).contains("LocalTableScan"), planOf(ap))
-    s.conf.set("spark.sql.catalog.graft.read.morAggPushdown", "false")
-    try assert(ap.collect()(0).getDecimal(0) ===
-      s.sql("SELECT avg(price) AS ap FROM graft_cnt.db.cs2")
-        .collect()(0).getDecimal(0))
-    finally s.conf.unset("spark.sql.catalog.graft.read.morAggPushdown")
+    withConf("spark.sql.catalog.graft.read.morAggPushdown" -> "false") {
+      assert(ap.collect()(0).getDecimal(0) ===
+        s.sql("SELECT avg(price) AS ap FROM graft_cnt.db.cs2")
+          .collect()(0).getDecimal(0))
+    }
     // Σ|huge| > Long.Max: a partial CAN overflow the scan's Long
     // accumulator, so the metadata path refuses (plan-only assert —
     // the scan itself may raise under ANSI, which is the point)
@@ -661,9 +644,9 @@ class MorCountPushdownSpec extends AnyFunSuite {
     s.sql("DROP TABLE IF EXISTS graft_cnt.db.c3")
     s.range(1000).select($"id".as("k"), ($"id" % 7).as("g"))
       .repartition(4).writeTo("graft_cnt.db.c3").create()
-    s.conf.set("spark.sql.catalog.graft.write.deleteMode", "merge-on-read")
-    try s.sql("DELETE FROM graft_cnt.db.c3 WHERE k >= 900")
-    finally s.conf.unset("spark.sql.catalog.graft.write.deleteMode")
+    withConf("spark.sql.catalog.graft.write.deleteMode" -> "merge-on-read") {
+      s.sql("DELETE FROM graft_cnt.db.c3 WHERE k >= 900")
+    }
     // entry present, count absent (never read a row) → no metadata claim
     assertScanServed("c3", 900L)
     // the .deletes observability table mirrors the distinction: the

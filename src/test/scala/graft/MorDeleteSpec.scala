@@ -4,9 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** MERGE-ON-READ DELETE (MorDeletes.scala): with
   * `write.deleteMode = merge-on-read`, a translatable DELETE commits
@@ -16,29 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * snapshot semantics for later appends, time travel, the COW
   * fallback for untranslatable conditions, materialization via
   * rewrite_deletes/compact, and the refusal rails (streaming, export). */
-class MorDeleteSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_mor_wh").toString
+class MorDeleteSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_mor")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_mor",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_mor.warehouse", warehouse)
-    s
-  }
-
-  private def withMor[A](f: => A): A = {
-    spark.conf.set("spark.sql.catalog.graft.write.deleteMode",
-      "merge-on-read")
-    try f
-    finally spark.conf.unset("spark.sql.catalog.graft.write.deleteMode")
-  }
+  private def withMor[A](f: => A): A =
+    withConf("spark.sql.catalog.graft.write.deleteMode" -> "merge-on-read")(f)
 
   /** (relativePath → inode) of every data file of `tbl`'s current
     * version. */

@@ -4,9 +4,7 @@ import java.nio.file.{Files, Path => JPath, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** MERGE-ON-READ row-level operations (DeltaRowLevel.scala): with
   * `write.merge.mode = merge-on-read` and a declared single-column
@@ -17,23 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * by earlier delete entries), rewrite_deletes compaction, the
   * max-delete-keys failure mode, COW fallback without a PK, and the
   * CAS conflict on a racing commit. */
-class MorMergeSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_mrg_wh").toString
+class MorMergeSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_mrg")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_mrg",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_mrg.warehouse", warehouse)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graft_mrg.db")
-    s
-  }
+  spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_mrg.db")
 
   private def tableDir(name: String): JPath =
     Paths.get(warehouse, "db", name)

@@ -1,10 +1,8 @@
 package graft
 
 import graft.streaming.{SessEvent, Streams}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** st03's cross-batch session continuity, proven on a FORCED multi-batch
   * run: the input is split into two parquet files replayed one per
@@ -12,18 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * spanning the batch boundary. A naive per-batch sessionizer (state lost
   * between batches) would open a new session at the boundary and over-count.
   */
-class MultiBatchSessionSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MultiBatchSessionSpec extends GraftSuite {
   test("sessions persist across micro-batches via carried state") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_mb_sess")
-    root.toFile.deleteOnExit()
+    val root = tmpDir("graft_mb_sess")
     val srcDir = root.resolve("stream").toString
     new java.io.File(srcDir).mkdirs()
 

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** st05's stream-static join shape, proven on a FORCED multi-batch run:
   * the stream arrives as two parquet files replayed one per micro-batch,
@@ -11,18 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * store), and the complete-mode aggregate over all batches equals the
   * batch join over the full input.
   */
-class MultiBatchStreamStaticSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MultiBatchStreamStaticSpec extends GraftSuite {
   test("stream-static join accumulates across micro-batches") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_mb_ss")
-    root.toFile.deleteOnExit()
+    val root = tmpDir("graft_mb_ss")
     val srcDir = root.resolve("stream").toString
     new java.io.File(srcDir).mkdirs()
 

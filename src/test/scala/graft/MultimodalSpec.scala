@@ -1,18 +1,9 @@
 package graft
 
 import graft.ops.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class MultimodalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MultimodalSpec extends GraftSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("binary payloads are 96 deterministic bytes with typed metadata") {

@@ -1,21 +1,13 @@
 package graft
 
 import graft.functions.NgramStats
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The one-pass NgramStats expression must be value-identical to the
   * explode + (id, ngram) count + per-id rollup formulation it replaced —
   * that formulation is what the t08 DuckDB oracle re-derives, so this
   * equivalence is what keeps t08/t11 hash-matching. */
-class NgramStatsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NgramStatsSpec extends GraftSuite {
   test("native stats equal the explode+groupBy formulation") {
     import spark.implicits._
     val rng = new scala.util.Random(7)

@@ -1,24 +1,15 @@
 package graft
 
 import graft.ops._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions.{explode, split, trim}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the properties that make these queries survive a
   * 100 TB scale-up are checked against the optimized physical plan, not
   * just eyeballed — filter/projection pushdown into the parquet scan,
   * broadcast of dimension sides, absence of cartesian products.
   */
-class PlanQualitySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanQualitySpec extends GraftSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
@@ -151,8 +142,7 @@ class PlanQualitySpec extends AnyFunSuite {
   test("dynamic partition pruning reaches a partitioned fact scan from a dim filter") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp").toFile
-    tmp.deleteOnExit()
+    val tmp = tmpDir("graft_dpp").toFile
     Tables.load(spark, dir, "events")
       .write.mode("overwrite").partitionBy("event_type")
       .parquet(s"$tmp/fact")
@@ -183,26 +173,17 @@ class PlanQualitySpec extends AnyFunSuite {
     // into the fact scan. Needs a non-broadcast join (bloom injection
     // skips broadcast joins — the filter would be redundant there), so
     // force the thresholds down for this test only and restore after.
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      .map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10MB")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10MB",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1") {
       val fact = Tables.load(spark, dir, "lineitem")
       val dim = Tables.load(spark, dir, "orders")
         .where(col("o_orderpriority") === "1-URGENT")
       val joined = fact.join(dim, fact("l_orderkey") === dim("o_orderkey"))
       val plan = planOf(joined)
       assert(plan.toLowerCase.contains("bloomfilter"), plan)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
   }
 
   test("d10 boilerplate removal groups chunk frequency on md5, never all-pairs") {
@@ -242,7 +223,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // pruned struct, and the fat payload sibling must be absent
     import spark.implicits._
     import org.apache.spark.sql.functions.struct
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nested_").toString
+    val tmp = tmpDir("graft_nested_").toString
     Seq((1L, ("img/jpeg", 640, "x" * 100)), (2L, ("img/png", 480, "y" * 100)))
       .toDF("id", "meta")
       .select($"id", $"meta._1".as("mime"), $"meta._2".as("width"),
@@ -272,10 +253,7 @@ class PlanQualitySpec extends AnyFunSuite {
     import spark.implicits._
     val sigs = graft.api.Graft.minhashSignatures(docs, $"doc_id", $"text")
     val pairs = graft.api.Graft.nearDupPairs(sigs)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val gated = graft.api.Graft.jaccardVerify(docs, $"doc_id", $"text",
         pairs, broadcastDocLimit = 0L)
       gated.collect()
@@ -285,7 +263,7 @@ class PlanQualitySpec extends AnyFunSuite {
       hinted.collect()
       val hPlan = hinted.queryExecution.executedPlan.toString
       assert(hPlan.contains("BroadcastHashJoin"), hPlan)
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("semanticContamination joins on bucket keys — no cartesian, bench broadcast") {
@@ -436,7 +414,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("partitioned MERGE prunes the rewrite scan to matching partitions at runtime") {
     import spark.implicits._
-    graft.sources.AtomicParquetCatalog.ensureRegistered(spark, "graft_pq")
+    registerCatalog("graft_pq")
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_pq.db")
     Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).toDF("id", "part", "v")
       .writeTo("graft_pq.db.prune1").using("parquet")
@@ -460,29 +438,18 @@ class PlanQualitySpec extends AnyFunSuite {
       "aggregatePushdown conf, so a plain filtered SELECT keeps its " +
       "Filter + pushed scan") {
     import spark.implicits._
-    graft.sources.AtomicParquetCatalog.ensureRegistered(spark, "graft_pq")
+    registerCatalog("graft_pq")
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_pq.db")
     spark.range(200).select($"id".as("k"), ($"id" * 2).as("v"))
       .writeTo("graft_pq.db.clean1").using("parquet").createOrReplace()
-    // pin the DEFAULT posture explicitly — a sibling suite in the same
-    // JVM may have leaked aggregatePushdown=true into the session
-    val prev = spark.conf.getOption("spark.sql.parquet.aggregatePushdown")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
-    try {
-      val df = spark.sql(
-        "SELECT v FROM graft_pq.db.clean1 WHERE k >= 100")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Filter"),
-        s"a default session's filtered SELECT must keep its Filter:\n$plan")
-      assert(!plan.contains("LocalTableScan"), plan)
-      assert(df.collect().map(_.getLong(0)).sorted ===
-        (100L until 200L).map(_ * 2).toArray)
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", v)
-      case None =>
-        spark.conf.unset("spark.sql.parquet.aggregatePushdown")
-    }
+    val df = spark.sql(
+      "SELECT v FROM graft_pq.db.clean1 WHERE k >= 100")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("Filter"),
+      s"a default session's filtered SELECT must keep its Filter:\n$plan")
+    assert(!plan.contains("LocalTableScan"), plan)
+    assert(df.collect().map(_.getLong(0)).sorted ===
+      (100L until 200L).map(_ * 2).toArray)
     spark.sql("DROP TABLE graft_pq.db.clean1")
   }
 }

@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
   * the scan, dimensions broadcast, aggregates are partial, codegen spans
   * cover the hot expressions).
   *
-  * Usage: sbt 'runMain graft.PlansDump [sfDir]'
+  * Usage: sbt 'Test/runMain graft.PlansDump [sfDir]'
   *
   * Defaults to sf0.01: several gates carry in-gate shape requires that
   * need more than a couple of files (q108's strict-subset skipping

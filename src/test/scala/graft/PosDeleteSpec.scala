@@ -4,9 +4,7 @@ import java.nio.file.{Files, Path => JPath, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** POSITIONAL merge-on-read deletes (Iceberg v2's second delete-file
   * format) + the `_file`/`_pos` metadata columns: tables with NO usable
@@ -18,23 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * apart), user-facing `_file`/`_pos` queries, rewrite_deletes
   * materialization, snapshot scoping, CDC reporting, and the COW
   * interplay. */
-class PosDeleteSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_pos_wh").toString
+class PosDeleteSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_pos")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_pos",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_pos.warehouse", warehouse)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graft_pos.db")
-    s
-  }
+  spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_pos.db")
 
   private def tableDir(name: String): JPath =
     Paths.get(warehouse, "db", name)
@@ -119,9 +104,7 @@ class PosDeleteSpec extends AnyFunSuite {
     import spark.implicits._
     // re-append a row identical to a DELETED one: ordinals address the
     // OLD file only, so the new row must survive
-    spark.conf.set("spark.sql.catalog.graft.write.deleteMode",
-      "merge-on-read")
-    try {
+    withConf("spark.sql.catalog.graft.write.deleteMode" -> "merge-on-read") {
       // untranslatable predicate (modulo) → the positional delta path,
       // NOT the predicate-sidecar path
       spark.sql("DELETE FROM graft_pos.db.p1 WHERE id % 10 = 7 AND id <= 100")
@@ -130,7 +113,7 @@ class PosDeleteSpec extends AnyFunSuite {
         .writeTo("graft_pos.db.p1").append()
       assert(spark.table("graft_pos.db.p1").where($"id" === 7L).count() == 1,
         "the re-appended row was eaten by an old positional entry")
-    } finally spark.conf.unset("spark.sql.catalog.graft.write.deleteMode")
+    }
   }
 
   test("duplicate rows: positional UPDATE touches each row individually " +

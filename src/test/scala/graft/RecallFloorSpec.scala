@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Recall FLOOR for the approximate retrieval paths — s05 measures
   * recall@k of every ANN path against its exact baseline but asserted
   * nothing, so an index regression (a banding typo, a broken bucket
@@ -18,14 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * banding never promised. A change that drops any path below its
   * historical band fails here loudly instead of costing a future round.
   */
-class RecallFloorSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RecallFloorSpec extends GraftSuite {
   test("ANN paths hold their recall floors at sf0.01 (ivf/lsh >= 0.5, pairs >= 0.7)") {
     val floors = Map("ivf" -> 0.5, "lsh" -> 0.5, "pairs" -> 0.7)
     val got = graft.ops.Similarity.s05AnnRecall(spark, "/root/testdata/sf0.01")

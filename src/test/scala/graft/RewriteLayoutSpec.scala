@@ -2,9 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** `CALL cat.system.rewrite_layout(table, spec)` — partition spec
   * evolution: the current snapshot rewritten under a new spec as one
@@ -13,22 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * flatten to unpartitioned, the old layout remaining time-travelable,
   * pruning working against the NEW layout, and the
   * invalid-spec / unknown-column guard rails. */
-class RewriteLayoutSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_relay_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_rl",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_rl.warehouse", warehouse)
-    s
-  }
+class RewriteLayoutSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_rl")
 
   private def tblDir(name: String): java.nio.file.Path =
     java.nio.file.Paths.get(warehouse, "db", name)

@@ -1,23 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Schema evolution on the lakehouse tables — the capability the reference
   * advertises via Iceberg (README.md:133) but never exercises: new columns
   * appear in later writes; older files backfill as nulls on read.
   */
-class SchemaEvolutionSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SchemaEvolutionSpec extends GraftSuite {
   test("parquet mergeSchema reads old+new files under one evolved schema") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+    val dir = tmpDir("graft_evolve").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "v1")
       .write.mode("append").parquet(dir)
     Seq((3L, "c", 1.5), (4L, "d", 2.5)).toDF("id", "v1", "v2_added")

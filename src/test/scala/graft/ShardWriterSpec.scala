@@ -2,9 +2,7 @@ package graft
 
 import graft.api.Graft
 import graft.medallion.Maintenance
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The end of the packing story: packSequences assigns every document a
   * place in the token stream; writeShards materializes those assignments
@@ -12,17 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * spec pins the arithmetic shard boundaries, in-shard ordering, and that
   * a shard directory is prunable by its partition value.
   */
-class ShardWriterSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ShardWriterSpec extends GraftSuite {
   test("writeShards groups consecutive sequences and stays shard-prunable") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val out = tmpDir("graft_shards").toString
     // 40 docs x 100 tokens = 4000 tokens; capacity 128 -> 32 sequences;
     // 8 seqs/shard -> shards 0..3
     val docs = (1L to 40L).map(i => (i, 100L)).toDF("doc_id", "toks")

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the native ShingleSet expression bit-equal to the declarative
   * formulation it replaced in the verify stages:
@@ -13,15 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * multi-byte characters (substr counts CHARACTERS, not bytes — the
   * offset walk must agree), repeats (dedup), and boundary lengths.
   */
-class ShingleSetSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("shingle-set-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ShingleSetSpec extends GraftSuite {
   private def declarative(t: org.apache.spark.sql.Column, n: Int) =
     sort_array(when(length(t) < n, array().cast(ArrayType(StringType)))
       .otherwise(array_distinct(transform(

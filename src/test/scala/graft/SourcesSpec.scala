@@ -1,27 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-format breadth beyond parquet: CSV and JSON round-trips with
   * explicit schemas (the engine's ingest surface for non-lakehouse feeds),
   * plus schema-on-read options.
   */
-class SourcesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SourcesSpec extends GraftSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("csv round-trip preserves values under an explicit schema") {
     val li = Tables.load(spark, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    val out = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val out = tmpDir("graft_csv").toString
     li.write.mode("overwrite").option("header", "true").csv(out)
     val back = spark.read.option("header", "true").schema(li.schema).csv(out)
     assert(back.count() == li.count())
@@ -33,7 +24,7 @@ class SourcesSpec extends AnyFunSuite {
     val ev = Tables.load(spark, dir, "events")
       .select($"event_id", $"user_id", $"event_type",
         when($"value" > 100, $"value").as("big_value")) // typed nulls
-    val out = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val out = tmpDir("graft_json").toString
     ev.write.mode("overwrite").json(out)
     val back = spark.read.schema(ev.schema).json(out)
     assert(back.exceptAll(ev).count() == 0 && ev.exceptAll(back).count() == 0)
@@ -42,7 +33,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("malformed csv rows are isolated in permissive mode") {
-    val out = java.nio.file.Files.createTempDirectory("graft_badcsv")
+    val out = tmpDir("graft_badcsv")
     java.nio.file.Files.writeString(out.resolve("part.csv"),
       "a,b\n1,2\nnot_a_number,3\n4,5\n")
     val schema = org.apache.spark.sql.types.StructType(Seq(

@@ -2,9 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** `CALL cat.system.evolve_layout(table, spec)` — METADATA-ONLY
   * partition spec evolution (Iceberg's contract, vs `rewrite_layout`'s
@@ -18,22 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * legacy sidecar, time travel across the boundary, and the refusal
   * rails (dynamic overwrite, same-spec evolve, widening a legacy
   * transform's source column). */
-class SpecEvolutionSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_sev_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_sev",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_sev.warehouse", warehouse)
-    s
-  }
+class SpecEvolutionSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_sev")
 
   private def tblDir(name: String): java.nio.file.Path =
     java.nio.file.Paths.get(warehouse, "db", name)
@@ -217,9 +201,7 @@ class SpecEvolutionSpec extends AnyFunSuite {
       .partitionedBy($"g").createOrReplace()
     spark.sql(
       "CALL graft_sev.system.evolve_layout('db.d', 'bucket(4,k)')").collect()
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       val e = intercept[Exception] {
         spark.sql("""INSERT OVERWRITE graft_sev.db.d
                     |SELECT k, g, ts, v FROM graft_sev.db.d VERSION AS OF 0
@@ -228,11 +210,6 @@ class SpecEvolutionSpec extends AnyFunSuite {
       def msgs(t: Throwable): Seq[String] =
         if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
       assert(msgs(e).exists(_.contains("mixed-spec")), e.toString)
-    } finally prior match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", p)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
   }
 
@@ -262,10 +239,9 @@ class SpecEvolutionSpec extends AnyFunSuite {
       .writeTo("graft_sev.db.u").append()
     // a MoR delete whose files span BOTH layouts: k 20..60 hits the
     // legacy identity(g) files (k<=40) and the bucket files (k>40)
-    spark.conf.set("spark.sql.catalog.graft.write.deleteMode",
-      "merge-on-read")
-    try spark.sql("DELETE FROM graft_sev.db.u WHERE k >= 20 AND k <= 60")
-    finally spark.conf.unset("spark.sql.catalog.graft.write.deleteMode")
+    withConf("spark.sql.catalog.graft.write.deleteMode" -> "merge-on-read") {
+      spark.sql("DELETE FROM graft_sev.db.u WHERE k >= 20 AND k <= 60")
+    }
     val pre = currentVersionDir("u")
     // data files only: the delete sidecar's entries are re-MATERIALIZED
     // by the restricted carry (same ids, intersected manifests), so
@@ -278,18 +254,13 @@ class SpecEvolutionSpec extends AnyFunSuite {
     (1L to 100L).map(i => (i, i * 1.0)).toDF("k", "dv")
       .writeTo("graft_sev.db.u_dim").using("parquet")
       .partitionedBy(bucket(4, $"k")).createOrReplace()
-    def spjShuffles(): Int = {
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val prior = keys.map(kk => kk -> spark.conf.getOption(kk))
-      val savedBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      keys.foreach(spark.conf.set(_, "true"))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // AQE off for the probe: the adaptive wrapper hides exchanges
-      // from a static executedPlan walk until execution finalizes it
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+    // AQE off for the probe: the adaptive wrapper hides exchanges
+    // from a static executedPlan walk until execution finalizes it
+    def spjShuffles(): Int =
+      withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
         val j = spark.table("graft_sev.db.u")
           .join(spark.table("graft_sev.db.u_dim"), Seq("k"))
           .groupBy($"k").agg(sum($"v" + $"dv"))
@@ -300,13 +271,7 @@ class SpecEvolutionSpec extends AnyFunSuite {
           case _ => ()
         }
         n
-      } finally {
-        prior.foreach { case (kk, Some(vv)) => spark.conf.set(kk, vv)
-                        case (kk, None) => spark.conf.unset(kk) }
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
-        spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
       }
-    }
     assert(spjShuffles() > 0, "mixed-spec read unexpectedly reported SPJ")
 
     val r = spark.sql("CALL graft_sev.system.unify_layout('db.u')").head()
@@ -362,11 +327,10 @@ class SpecEvolutionSpec extends AnyFunSuite {
     // ordinal sidecar survives the unify's restricted carry — the
     // exact entry shape that was re-reported as fresh CDC deletes
     // when the carry minted new ids
-    spark.conf.set("spark.sql.catalog.graft.write.rowLevelMode",
-      "merge-on-read")
-    try spark.sql(
-      "UPDATE graft_sev.db.u2 SET v = -1.0 WHERE k = 50 OR k = 60")
-    finally spark.conf.unset("spark.sql.catalog.graft.write.rowLevelMode")
+    withConf("spark.sql.catalog.graft.write.rowLevelMode" -> "merge-on-read") {
+      spark.sql(
+        "UPDATE graft_sev.db.u2 SET v = -1.0 WHERE k = 50 OR k = 60")
+    }
     val head = currentVersionDir("u2")
     val ls = java.nio.file.Files.list(head.resolve("_deletes"))
     val hasPos =
@@ -402,13 +366,7 @@ class SpecEvolutionSpec extends AnyFunSuite {
         (lit(1704067200L) + $"i" * 21600L).cast("timestamp").as("ts"),
         ($"i" * 2.5).as("v"))
       .writeTo("graft_sev.db.bsm").append()
-    val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    // pin the broadcast threshold explicitly: the suite shares one
-    // session and another suite's conf window may be mid-flight
-    val savedBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val big = spark.range(1L, 100000L)
         .select($"id".as("k"), ($"id" * 2.0).as("bv"))
       val j = big.join(spark.table("graft_sev.db.bsm"), Seq("k"))
@@ -421,9 +379,6 @@ class SpecEvolutionSpec extends AnyFunSuite {
         "a 60-row mixed-spec table lost its broadcast decision — the " +
           s"union scan reported no size:\n${j.queryExecution.executedPlan}")
       assert(j.count() == 60)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
     }
   }
 

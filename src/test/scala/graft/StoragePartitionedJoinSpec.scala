@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Storage-partitioned joins on the atomic catalog: two tables
   * partitioned on the join key report KeyGroupedPartitioning, and Spark
@@ -11,33 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition-value group straight from both tables' files. The 100 TB
   * claim this pins: co-partitioned fact-to-fact joins on catalog tables
   * pay no exchange on either side. */
-class StoragePartitionedJoinSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_spj_wh").toString
+class StoragePartitionedJoinSpec extends GraftSuite {
+  registerCatalog("graft_spj")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_spj",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_spj.warehouse", warehouse)
-    s
-  }
-
-  private def withBucketing[A](f: => A): A = {
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "true")
-    // co-partitioned single-key joins need the partition key to be the
-    // full cluster key; keep the default requireAllClusterKeysForCoPartition
-    try f finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-    }
-  }
+  // co-partitioned single-key joins need the partition key to be the
+  // full cluster key; keep the default requireAllClusterKeysForCoPartition
+  private def withBucketing[A](f: => A): A =
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")(f)
 
   private def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
     val plan = df.queryExecution.executedPlan

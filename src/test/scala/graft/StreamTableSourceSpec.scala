@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** STREAMING READS of catalog tables — `spark.readStream.table(t)`:
   * the first micro-batch is the snapshot current at stream start, then
@@ -14,22 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the committed offset (no re-emission), the COW re-emission
   * semantics on a MERGE (documented ignoreChanges posture), and the
   * unpartitioned + hidden-transform layouts both streaming. */
-class StreamTableSourceSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_sts_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_sts",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_sts.warehouse", warehouse)
-    s
-  }
+class StreamTableSourceSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_sts")
 
   /** Run one round of available data through foreachBatch (the sink
     * shape that supports checkpoint recovery), return the rows. */
@@ -58,7 +42,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
     (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "v")
       .writeTo("graft_sts.db.src").using("parquet")
       .partitionedBy(bucket(4, $"id")).createOrReplace()
-    val ckpt = Files.createTempDirectory("graft_sts_ck1")
+    val ckpt = tmpDir("graft_sts_ck1")
     // batch 1: the full snapshot at stream start
     assert(drain("graft_sts.db.src", ckpt) ==
       (1L to 10L).map(i => (i, i * 1.0)))
@@ -79,7 +63,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
                 |ON t.id = s.mid
                 |WHEN MATCHED THEN UPDATE SET v = s.nv""".stripMargin)
     val ckpt = java.nio.file.Paths.get(
-      Files.createTempDirectory("graft_sts_ck1x").toString)
+      tmpDir("graft_sts_ck1x").toString)
     // a fresh stream sees the merged snapshot in batch 1 (13 rows)
     val all = drain("graft_sts.db.src", ckpt)
     assert(all.size == 12 && all.contains((5L, 500.0)), all)
@@ -104,7 +88,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
       .table("graft_sts.db.big")
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_sts_ck4").toString)
+        tmpDir("graft_sts_ck4").toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val rows = batch.select(col("id"), col("v")).collect()
         if (rows.nonEmpty) batchSizes.add(rows.length)
@@ -132,7 +116,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
     (1L to 6L).map(i => (i, i * 1.0)).toDF("id", "v")
       .writeTo("graft_sts.db.scc").using("parquet")
       .partitionedBy(bucket(2, $"id")).createOrReplace()
-    val ckpt = Files.createTempDirectory("graft_sts_ck5")
+    val ckpt = tmpDir("graft_sts_ck5")
     def drainSkip(): Seq[(Long, Double)] = {
       val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
       val q = spark.readStream
@@ -171,7 +155,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_sts.db")
     Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v")
       .writeTo("graft_sts.db.flat").using("parquet").createOrReplace()
-    val ckpt = Files.createTempDirectory("graft_sts_ck2")
+    val ckpt = tmpDir("graft_sts_ck2")
     assert(drain("graft_sts.db.flat", ckpt) ==
       Seq((1L, 1.0), (2L, 2.0)))
     Seq((3L, 3.0)).toDF("id", "v").writeTo("graft_sts.db.flat").append()
@@ -180,7 +164,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
     val q = spark.readStream.table("graft_sts.db.flat").select($"v")
       .writeStream.format("memory").queryName("sts7")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_sts_ck3").toString)
+        tmpDir("graft_sts_ck3").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination(60000)
@@ -198,7 +182,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
       .repartition(4)
       .writeTo("graft_sts.db.ovf").using("parquet")
       .partitionedBy(bucket(4, $"id")).createOrReplace()
-    val ckpt = Files.createTempDirectory("graft_sts_ovf")
+    val ckpt = tmpDir("graft_sts_ovf")
     val outA = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
     // run A: one file per trigger, crash BEFORE processing batch 1 —
     // the checkpoint is left MID-DIFF (batch 0 committed, k=1)
@@ -244,7 +228,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
     Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v")
       .writeTo("graft_sts.db.sv").using("parquet").createOrReplace()
     Seq((3L, 3.0)).toDF("id", "v").writeTo("graft_sts.db.sv").append()
-    val ckpt = Files.createTempDirectory("graft_sts_sv")
+    val ckpt = tmpDir("graft_sts_sv")
     def drainLatest(): Seq[(Long, Double)] = {
       val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
       val q = spark.readStream
@@ -272,7 +256,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
       .option("startingVersion", "v-00000000-dead-beef-0000-000000000000")
       .table("graft_sts.db.sv")
       .writeStream.option("checkpointLocation",
-        Files.createTempDirectory("graft_sts_svbad").toString)
+        tmpDir("graft_sts_svbad").toString)
       .format("memory").queryName("sts_svbad")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -304,7 +288,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
       .option("startingTimestamp", ms)
       .table("graft_sts.db.stt")
       .writeStream.option("checkpointLocation",
-        Files.createTempDirectory("graft_sts_stt").toString)
+        tmpDir("graft_sts_stt").toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.select(col("id"), col("v")).collect()
           .foreach(r => out.add((r.getLong(0), r.getDouble(1))))
@@ -336,7 +320,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
       .option("maxBytesPerTrigger", 1) // below any parquet footer
       .table("graft_sts.db.ovb")
       .writeStream.option("checkpointLocation",
-        Files.createTempDirectory("graft_sts_ovb").toString)
+        tmpDir("graft_sts_ovb").toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batches.incrementAndGet()
         batch.select(col("id"), col("v")).collect()
@@ -374,7 +358,7 @@ class StreamTableSourceSpec extends AnyFunSuite {
     val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double, String)]()
     val q = spark.readStream.table("graft_sts.db.sev")
       .writeStream.option("checkpointLocation",
-        Files.createTempDirectory("graft_sts_sev").toString)
+        tmpDir("graft_sts_sev").toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.select(col("id"), col("v"), col("g")).collect()
           .foreach(r => out.add((r.getLong(0), r.getDouble(1), r.getString(2))))

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Kill-and-restart recovery for the streaming-upsert path (st11/st12's
   * production shape): a FILE-source stream running foreachBatch MERGEs
@@ -17,32 +16,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * MERGE racing the stream's micro-batch commits through the same CAS —
   * the loser conflicts and a retry loses neither update.
   */
-class StreamingRecoverySpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_recovery_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_rec",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_rec.warehouse", warehouse)
-    s
-  }
+class StreamingRecoverySpec extends GraftSuite {
+  registerCatalog("graft_rec")
 
   private def mkdirs(): (java.nio.file.Path, java.nio.file.Path) =
-    (Files.createTempDirectory("graft_rec_in"),
-      Files.createTempDirectory("graft_rec_ckpt"))
+    (tmpDir("graft_rec_in"), tmpDir("graft_rec_ckpt"))
 
   private def writeInput(dir: java.nio.file.Path, name: String,
                          rows: Seq[(Long, Double)]): Unit = {
     import spark.implicits._
     // land the file atomically: write aside, move the part file in
-    val tmp = Files.createTempDirectory("graft_rec_stage")
+    val tmp = tmpDir("graft_rec_stage")
     rows.toDF("id", "v").coalesce(1).write.parquet(tmp.resolve("w").toString)
     val part = Files.list(tmp.resolve("w")).iterator()
     var moved = false

@@ -1,9 +1,8 @@
 package graft
 
 import graft.api.Graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming dimension maintenance: a change log arriving as micro-batches,
   * each batch folded into a Type-2 SCD history with [[Graft.scdMerge]]
@@ -15,19 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * states but not for A->B->A — so the convergence contract is per-batch
   * granularity, stated here and in the scaladoc).
   */
-class StreamingScdSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StreamingScdSpec extends GraftSuite {
   test("per-batch scdMerge replay equals the one-pass SCD2 build") {
     import spark.implicits._
     def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val base = java.nio.file.Files.createTempDirectory("graft_scd_stream")
-    base.toFile.deleteOnExit()
+    val base = tmpDir("graft_scd_stream")
     val in = new java.io.File(base.toFile, "in"); in.mkdirs()
 
     val batches = Seq(

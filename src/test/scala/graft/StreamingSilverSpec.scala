@@ -1,28 +1,19 @@
 package graft
 
 import graft.medallion.{BronzeGen, Silver}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming ingest variant the reference's unused checkpoints bucket
   * implies (SURVEY §1.1): bronze landing files arrive as a stream and flow
   * through the SAME silver expression library as batch — proving the
   * enrichment is a stateless projection usable in both modes.
   */
-class StreamingSilverSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StreamingSilverSpec extends GraftSuite {
   test("streaming silver appends micro-batches into the shared catalog table") {
     import graft.medallion.{MdpConfig, Pipeline}
     import spark.implicits._
     val epoch = 1754982000L
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_tbl").toString
+    val base = tmpDir("graft_stream_tbl").toString
     val cfg = MdpConfig.fromEnv(base)
     // the table name is global catalog state shared by suites in this JVM:
     // start from a clean catalog and leave one behind whatever happens
@@ -67,7 +58,7 @@ class StreamingSilverSpec extends AnyFunSuite {
     import graft.medallion.{MdpConfig, Pipeline}
     import spark.implicits._
     val epoch = 1754982000L
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_eo").toString
+    val base = tmpDir("graft_stream_eo").toString
     val cfg = MdpConfig.fromEnv(base)
     new java.io.File(cfg.bronzeUri).mkdirs()
 
@@ -108,7 +99,7 @@ class StreamingSilverSpec extends AnyFunSuite {
   test("silver enrichment runs identically over a bronze file stream") {
     import spark.implicits._
     val epoch = 1754982000L
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_silver").toString
+    val dir = tmpDir("graft_stream_silver").toString
 
     // land a seeded bronze batch as the "arriving" file
     val bronze = BronzeGen.generate(spark, 1000, 2, payloadKb = 1,

@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** TABLE CONSTRAINTS on the atomic catalog (Spark 4's connector
   * constraint surface): ENFORCED CHECK constraints are validated
   * inside every write's own query plan — a violating row FAILS the
@@ -12,22 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * happens); adding a CHECK over data that already violates it fails
   * the DDL; PRIMARY KEY / UNIQUE persist as informational (NOT
   * ENFORCED) metadata; FOREIGN KEY is refused pointedly. */
-class TableConstraintSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_tc_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_tc",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_tc.warehouse", warehouse)
-    s
-  }
+class TableConstraintSpec extends GraftSuite {
+  registerCatalog("graft_tc")
 
   test("enforced CHECK fails a violating write; the table is untouched") {
     import spark.implicits._

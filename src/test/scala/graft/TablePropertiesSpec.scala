@@ -4,9 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Persisted TBLPROPERTIES: CREATE ... TBLPROPERTIES lands in the
   * table's `_props` sidecar, SHOW TBLPROPERTIES / ALTER TABLE SET |
@@ -14,22 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the load-bearing consumer works: `write.delete.mode = merge-on-read`
   * as a TABLE property makes DELETE metadata-only with no session
   * conf. */
-class TablePropertiesSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_props_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_props",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_props.warehouse", warehouse)
-    s
-  }
+class TablePropertiesSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_props")
 
   private def props(tbl: String): Map[String, String] =
     spark.sql(s"SHOW TBLPROPERTIES graft_props.db.$tbl").collect()

@@ -2,10 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The `years`/`months`/`hours` hidden time transforms — the rest of
   * the Iceberg time-granularity ladder around `days(ts)`
@@ -17,22 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * hard-link), zero-exchange SPJ between two month-partitioned tables
   * (proving FunctionCatalog resolution of the `months` transform), and
   * the hours-needs-a-timestamp guard rail. */
-class TimeTransformSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_time_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_time",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_time.warehouse", warehouse)
-    s
-  }
+class TimeTransformSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_time")
 
   private def tblDir(name: String): java.nio.file.Path =
     java.nio.file.Paths.get(warehouse, "db", name)
@@ -188,11 +172,8 @@ class TimeTransformSpec extends AnyFunSuite {
     eventsDf(12, 864000L).select($"id", $"ts", ($"v" * 2).as("w"))
       .writeTo("graft_time.db.mb").using("parquet")
       .partitionedBy(months($"ts")).createOrReplace()
-    val saved = (spark.conf.get("spark.sql.sources.v2.bucketing.enabled"),
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("graft_time.db.ma")
         .join(spark.table("graft_time.db.mb"), Seq("ts"))
         .agg(count(lit(1)).as("n"), sum($"v" + $"w").as("s"))
@@ -203,9 +184,6 @@ class TimeTransformSpec extends AnyFunSuite {
       }
       assert(shuffles.isEmpty,
         s"months SPJ must plan zero exchanges, found ${shuffles.size}")
-    } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", saved._1)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved._2)
     }
     spark.sql("DROP TABLE graft_time.db.ma")
     spark.sql("DROP TABLE graft_time.db.mb")

@@ -2,10 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** `truncate(w, col)` hidden transform — the ORDER-PRESERVING
   * coarsening for high-cardinality keys: string keys land under their
@@ -17,22 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * zero-exchange SPJ between two co-truncated tables (proving
   * FunctionCatalog resolution of `truncate`), and the unsupported-type
   * guard rail. */
-class TruncateTransformSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_trunc_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_tr",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_tr.warehouse", warehouse)
-    s
-  }
+class TruncateTransformSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_tr")
 
   private def tblDir(name: String): java.nio.file.Path =
     java.nio.file.Paths.get(warehouse, "db", name)
@@ -181,11 +165,8 @@ class TruncateTransformSpec extends AnyFunSuite {
     skuDf.writeTo("graft_tr.db.ta").append()
     skuDf.select($"id", $"sku", ($"v" * 2).as("w"))
       .writeTo("graft_tr.db.tb").append()
-    val saved = (spark.conf.get("spark.sql.sources.v2.bucketing.enabled"),
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("graft_tr.db.ta")
         .join(spark.table("graft_tr.db.tb"), Seq("sku"))
         .agg(count(lit(1)).as("n"), sum($"v" + $"w").as("s"))
@@ -197,9 +178,6 @@ class TruncateTransformSpec extends AnyFunSuite {
       }
       assert(shuffles.isEmpty,
         s"truncate SPJ must plan zero exchanges, found ${shuffles.size}")
-    } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", saved._1)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved._2)
     }
     spark.sql("DROP TABLE graft_tr.db.ta")
     spark.sql("DROP TABLE graft_tr.db.tb")

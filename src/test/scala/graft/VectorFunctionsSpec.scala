@@ -1,17 +1,9 @@
 package graft
 
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class VectorFunctionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class VectorFunctionsSpec extends GraftSuite {
   test("dotF64 matches the higher-order fold bit-for-bit") {
     import spark.implicits._
     val rng = new scala.util.Random(7)

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Hash-clustered partitioned writes (Iceberg's
   * `write.distribution-mode=hash` posture): with
@@ -15,22 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * a bucket product over 100, a days×bucket composite — and stays off
   * for coarse layouts, where the exchange would cost parallelism
   * (PartitionField.clusterWrite holds the measured argument). */
-class WriteDistributionSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_wd_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_wd",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_wd.warehouse", warehouse)
-    s
-  }
+class WriteDistributionSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_wd")
 
   private def dataFiles(table: String): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
@@ -48,9 +32,7 @@ class WriteDistributionSpec extends AnyFunSuite {
   test("clustered write lands one file per partition value") {
     import spark.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_wd.db")
-    spark.conf.set("spark.sql.catalog.graft.write.clusterByPartitions",
-      "true")
-    try {
+    withConf("spark.sql.catalog.graft.write.clusterByPartitions" -> "true") {
       // 4 input tasks x 3 partition values: unclustered this writes up
       // to 12 files; clustered, each value lands from one task = 3
       (1L to 300L).map(i => (i % 3, i)).toDF("k", "v")
@@ -62,8 +44,7 @@ class WriteDistributionSpec extends AnyFunSuite {
         s"expected 3 files (one per partition value), got ${files.size}:\n" +
           files.mkString("\n"))
       assert(spark.table("graft_wd.db.cl1").count() == 300)
-    } finally spark.conf
-      .unset("spark.sql.catalog.graft.write.clusterByPartitions")
+    }
     spark.sql("DROP TABLE graft_wd.db.cl1")
   }
 
@@ -117,7 +98,7 @@ class WriteDistributionSpec extends AnyFunSuite {
   test("medallion silver: pinned-width exchange, no AQE coalesce, one " +
       "file per directory") {
     import graft.medallion.{MdpConfig, Pipeline}
-    val base = TempDirs.create("graft_wd_mdp").toString
+    val base = tmpDir("graft_wd_mdp").toString
     val cfg = MdpConfig.fromEnv(base).copy(ingestGb = 0.001, payloadKb = 1,
       partitions = 4, silverShufflePartitions = 4)
     val writePlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -1,9 +1,7 @@
 package graft
 
 import graft.medallion.Maintenance
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The z-order layout op's whole point is multi-dimensional file pruning:
   * after [[Maintenance.zorderLayout]], a predicate on EITHER clustering
@@ -11,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rows cluster into few files, and parquet min/max stats skip the rest).
   * A single-column sort gives that for one dimension only — the contrast
   * case proves the interleave is doing the work. */
-class ZorderLayoutSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ZorderLayoutSpec extends GraftSuite {
   private def filesTouched(path: String, pred: org.apache.spark.sql.Column): Long =
     spark.read.parquet(path).where(pred)
       .select(input_file_name()).distinct().count()

@@ -2,9 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSuite
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-memory bounds of a LONG-RUNNING changelog stream
   * (ChangelogRead.scala): the per-version file-set and per-advance
@@ -16,23 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * strictly older than the committed base are gone (a tailing stream's
   * caches stay O(in-flight chain), not O(versions ever seen));
   * (c) eviction never changes the rows a multi-trigger drain serves. */
-class ChangelogCacheEvictionSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_cce_wh").toString
+class ChangelogCacheEvictionSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_cce")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_cce",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_cce.warehouse", warehouse)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cce.db")
-    s
-  }
+  spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cce.db")
 
   test("commit() keeps the caches bounded while a tailing stream " +
       "drains commit after commit, without changing what it serves") {

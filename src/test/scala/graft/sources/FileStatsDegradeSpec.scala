@@ -2,8 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSuite
 
 /** The commit-lock safety contract of the footer-stats pass: a FAILING
   * footer read in the 65–1024-file driver-pool band degrades (the bad
@@ -15,18 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * itself is not simulated here (no injection seam into Hadoop I/O),
   * but the degrade path it shares with read failures is.
   */
-class FileStatsDegradeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("filestats-degrade")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class FileStatsDegradeSpec extends GraftSuite {
   test("pool-band footer pass: one corrupt file degrades to unskippable, " +
       "record() completes and covers the rest") {
-    val tableDir = Files.createTempDirectory("graft_fs_degrade")
+    val tableDir = tmpDir("graft_fs_degrade")
     val versionDir = tableDir.resolve("v-test")
     // 80 files lands squarely in the 65..1024 driver-pool band: a
     // partitioned write yields exactly one file per k directory

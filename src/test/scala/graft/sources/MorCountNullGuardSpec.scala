@@ -2,8 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSuite
 
 /** COUNT(col)'s null-guard (KeyGroupedScan.morCountCol /
   * MorDeletes.matchesNulls): the non-null metadata answer subtracts an
@@ -16,24 +15,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * COUNT(*) (where the matched count subtracts from TOTAL rows) keeps
   * its metadata answer. The entry is injected directly so the test
   * does not depend on which write path persists counts today. */
-class MorCountNullGuardSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_ng_wh").toString
+class MorCountNullGuardSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_ng")
+  spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_ng.db")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_ng",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_ng.warehouse", warehouse)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graft_ng.db")
-    s
-  }
+  /** Every test here reads counts through aggregate pushdown. */
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.parquet.aggregatePushdown" -> "true")(super.withFixture(test))
 
   test("a COUNTED isnull entry refuses COUNT(col) to the scan (exact " +
       "answer), while COUNT(*) keeps the metadata path") {

@@ -1,15 +1,13 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.write.LogicalWriteInfoImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.scalatest.funsuite.AnyFunSuite
 
 /** NATIVE STREAMING WRITES (`writeStream.toTable` on a catalog table)
   * and the fast-append REBASE: pins (1) the end-to-end engine path —
@@ -21,22 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * carry); (4) a conflicted fast-append REBASING onto the new head
   * instead of failing, and still refusing when the concurrent commit
   * changed the table's shape. */
-class StreamingWriteSpec extends AnyFunSuite {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_sw_wh").toString
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_sw",
-      "graft.sources.AtomicParquetCatalog")
-    s.conf.set("spark.sql.catalog.graft_sw.warehouse", warehouse)
-    s
-  }
+class StreamingWriteSpec extends GraftSuite {
+  private val warehouse: String = registerCatalog("graft_sw")
 
   private def catalog: AtomicParquetCatalog =
     spark.sessionState.catalogManager.catalog("graft_sw")
@@ -60,7 +44,7 @@ class StreamingWriteSpec extends AnyFunSuite {
       .writeTo("graft_sw.db.src").using("parquet").createOrReplace()
     (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "v").limit(0)
       .writeTo("graft_sw.db.out").using("parquet").createOrReplace()
-    val ckpt = Files.createTempDirectory("graft_sw_ckpt")
+    val ckpt = tmpDir("graft_sw_ckpt")
     drainToTable("graft_sw.db.src", "graft_sw.db.out", ckpt)
     assert(spark.table("graft_sw.db.out").count() === 10)
     // tail: two more commits, resumed from the same checkpoint
@@ -96,7 +80,7 @@ class StreamingWriteSpec extends AnyFunSuite {
     (1L to 20L).map(i => (i, i * 1.0)).toDF("id", "v").limit(0)
       .writeTo("graft_sw.db.pout").using("parquet")
       .partitionedBy(bucket(4, $"id")).createOrReplace()
-    val ckpt = Files.createTempDirectory("graft_sw_pckpt")
+    val ckpt = tmpDir("graft_sw_pckpt")
     drainToTable("graft_sw.db.psrc", "graft_sw.db.pout", ckpt)
     assert(spark.table("graft_sw.db.pout").count() === 20)
     // the snapshot's layout is the bucket spec, not flat epoch files

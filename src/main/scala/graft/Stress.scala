@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.MetaStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -260,12 +261,11 @@ object Stress {
       val gateDir = java.nio.file.Files
         .createTempDirectory(s"graft_stress_gates_$n")
       def writeOne(df: DataFrame, name: String): Unit = {
-        import scala.jdk.CollectionConverters._
         val staging = gateDir.resolve(s"$name.stage")
         df.coalesce(1).write.parquet(staging.toString)
-        val one = java.nio.file.Files.list(staging).iterator().asScala
+        val one = MetaStore.list(staging)
           .find(_.getFileName.toString.endsWith(".parquet")).get
-        java.nio.file.Files.move(one, gateDir.resolve(s"$name.parquet"))
+        MetaStore.move(one, gateDir.resolve(s"$name.parquet"))
       }
       writeOne(docs, "documents")
       val eventsK = (0 until n).map { i =>
@@ -800,13 +800,7 @@ object Stress {
       spark.sql("DROP TABLE graft_sn.db.ser")
       spark.sql("DROP TABLE graft_sn.db.conc")
 
-      def rmTree(p: java.nio.file.Path): Unit = {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq
-            .reverse.foreach(java.nio.file.Files.delete)
-      }
-      rmTree(gateDir)
+      MetaStore.deleteTree(gateDir)
 
       docs.unpersist()
       f"""{"k":$n,"n_docs":$nDocs,"sig_s":$tSig%.2f,"pairs_s":$tPairs%.2f,"n_pairs":$nPairs,"verify_s":$tVerify%.2f,"n_edges":$nEdges,"dedup_s":$tDedup%.2f,"n_kept":$nKept,"contam_s":$tContam%.2f,"contam_bloom_s":$tContamB%.2f,"repetition_s":$tRep%.2f,"boilerplate_s":$tBp%.2f,"clean_s":$tClean%.2f,"n_clean":$nClean,"semantic_s":$tSem%.2f,"n_semantic":$nSem,"bpe_s":$tBpe%.2f,"n_merges":$nMergesGot,"fluency_s":$tFluency%.2f,"chunk_s":$tChunk%.2f,"score_s":$tScore%.2f,"triangles_s":$tTri%.2f,"n_triangles":$nTri,"cc_local_s":$tCcLocal%.2f,"cc_dist_s":$tCcDist%.2f,"cdc_s":$tCdc%.2f,"n_cdc_chunks":$nCdcChunks,"overlap_s":$tOv%.2f,"overlap_sketch_s":$tOvSk%.2f,"robust_s":$tRob%.2f,"spans_s":$tSpans%.2f,"excise_s":$tExcise%.2f,"contain_s":$tContain%.2f,"n_contain":$nContain,"split_s":$tSplit%.2f,"n_split":$nSplit,"budget_s":$tBudget%.2f,"n_budget":$nBudget,"budget_group_s":$tBudgetG%.2f,"n_budget_group":$nBudgetG,"hh_s":$tHh%.2f,"n_hh":$nHh,"vocab_s":$tVocab%.2f,"n_vocab":$nVocab,"kn_s":$tKn%.2f,"iw_s":$tIw%.2f,"drift_s":$tDrift%.2f,"mm04_s":$tMm04%.2f,"n_mm04":$nMm04,"t43_s":$tT43%.2f,"t44_s":$tT44%.2f,"st09_s":$tSt09%.2f,"st10_s":$tSt10%.2f,"merge_part_s":$tMergePart%.2f,"upsert_s":$tUpsert%.2f,"upsert_replay_s":$tUpsertReplay%.2f,"relayout_s":$tRelayout%.2f,"bucket_merge_s":$tBucketMerge%.2f,"evolve_s":$tEvolve%.2f,"unify_s":$tUnify%.2f,"hist_diff_s":$tHist%.2f,"n_hist_changed":$nChanged,"st13_catchup_s":$tCatch%.2f,"st13_catchup_batches":${nCatchB.get()},"changelog_snap_s":$tClogSnap%.2f,"changelog_cdc_s":$tClogCdc%.2f,"mor_count_s":$tMorCount%.2f,"clog_compact_s":$tClogCompact%.2f,"clog_maint_drain_s":$tClogMaintDrain%.2f,"clog_bytecap_s":$tClogByteCap%.2f,"clog_bytecap_batches":$nByteCapBatches,"cluster_s":$tCluster%.2f,"skip_off_s":$tSkipOff%.2f,"skip_on_s":$tSkipOn%.2f,"bloom_off_s":$tBloomOff%.2f,"bloom_on_s":$tBloomOn%.2f,"mor_delete_s":$tMorDelete%.2f,"rewrite_deletes_s":$tRewriteDel%.2f,"cow_delete_s":$tCowDelete%.2f,"mor_merge_s":$tMorMerge%.2f,"pos_merge_s":$tPosMerge%.2f,"cow_scatter_merge_s":$tCowScatter%.2f,"stream_sink_s":$tStreamSink%.2f,"stream_sink_epochs":$sinkEpochs,"serial_append8_s":$tSerial8%.2f,"conc_append8_s":$tConc8%.2f}"""

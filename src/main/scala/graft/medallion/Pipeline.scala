@@ -269,36 +269,33 @@ object Pipeline {
       .collect().headOption.map(_.getString(1))
     catch { case NonFatal(_) => None }
 
-  /** Silver: read bronze, enrich, write partitioned catalog table. */
+  /** Silver: read bronze, enrich, write partitioned catalog table. Its
+    * session confs hold only while it runs ([[graft.withConf]]). */
   def silver(spark: SparkSession, cfg: MdpConfig): Long = {
-    spark.conf.set("spark.sql.shuffle.partitions", cfg.silverShufflePartitions)
     // Reference mitigation for 256KB payload rows (43-silver-build.yaml:92-94):
     // columnar batches of wide strings blow up memory — the reference turns
-    // the vectorized reader OFF and shrinks the batch; mirror both, and
-    // re-enable explicitly for small payloads so a prior large-payload run
-    // on the same session can't leak the disabled reader.
-    // MDP_WIDE_MITIGATION=off is the measurement escape hatch that keeps
-    // the vectorized reader ON under wide payloads — it exists so the
-    // mitigation's effect can be A/B-measured (PERF.md pins it at the
-    // 10x payload stress), never for production use.
-    val widePayload = cfg.payloadKb >= 64 &&
-      !sys.env.get("MDP_WIDE_MITIGATION").contains("off")
-    spark.conf.set("spark.sql.parquet.enableVectorizedReader", (!widePayload).toString)
-    if (widePayload)
-      spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "1024")
-    val bronzeDf = spark.read.parquet(cfg.bronzeUri)
-    val bronzeCount = bronzeDf.count()
-    log(s"Bronze layer contains $bronzeCount customer interactions")
-    require(bronzeCount > 0, "Bronze dataset is empty - run bronze first")
-    val silverDf = Silver.enrich(bronzeDf,
-      clockDate = to_date(timestamp_seconds(lit(cfg.baseEpochS))),
-      clockTs = timestamp_seconds(lit(cfg.baseEpochS)),
-      clockEpochS = lit(cfg.baseEpochS))
-    val n = writeTable(spark, silverDf, cfg, "silver",
-      "customer_interactions_enriched",
-      cfg.silverFallbackUri, Seq("interaction_date", "channel"))
-    log(s"Rows: $n")
-    n
+    // the vectorized reader OFF and shrinks the batch; mirror both.
+    val widePayload = cfg.payloadKb >= 64
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> cfg.silverShufflePartitions.toString,
+      "spark.sql.parquet.enableVectorizedReader" -> (!widePayload).toString) ++
+      (if (widePayload) Seq("spark.sql.parquet.columnarReaderBatchSize" -> "1024")
+       else Nil)
+    graft.withConf(spark, confs: _*) {
+      val bronzeDf = spark.read.parquet(cfg.bronzeUri)
+      val bronzeCount = bronzeDf.count()
+      log(s"Bronze layer contains $bronzeCount customer interactions")
+      require(bronzeCount > 0, "Bronze dataset is empty - run bronze first")
+      val silverDf = Silver.enrich(bronzeDf,
+        clockDate = to_date(timestamp_seconds(lit(cfg.baseEpochS))),
+        clockTs = timestamp_seconds(lit(cfg.baseEpochS)),
+        clockEpochS = lit(cfg.baseEpochS))
+      val n = writeTable(spark, silverDf, cfg, "silver",
+        "customer_interactions_enriched",
+        cfg.silverFallbackUri, Seq("interaction_date", "channel"))
+      log(s"Rows: $n")
+      n
+    }
   }
 
   /** Gold: KPI aggregate from the silver table, listing silver's partition

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Det, Tables}
+import graft.sources.MetaStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1054,7 +1055,7 @@ object Extras {
         $"o_totalprice", $"o_orderpriority")
       .writeTo("graft_ma.db.ord_mor").using("parquet")
       .partitionedBy($"o_orderstatus").create()
-    def inodes(): Map[String, Any] = gmaDataInodes(gmaHeadDir(s, "ord_mor"))
+    def inodes(): Map[String, Any] = dataInodes(gmaHeadDir(s, "ord_mor"))
     val before = inodes()
     graft.withConf(s, "spark.sql.catalog.graft.write.deleteMode" -> "merge-on-read") {
       s.sql("DELETE FROM graft_ma.db.ord_mor " +
@@ -1316,25 +1317,24 @@ object Extras {
   private def gmaHeadDir(s: SparkSession, name: String): java.nio.file.Path = {
     val wh = s.conf.get("spark.sql.catalog.graft_ma.warehouse")
     val tdir = java.nio.file.Paths.get(wh, "db", name)
-    tdir.resolve(new String(java.nio.file.Files.readAllBytes(
-      tdir.resolve("_current")), "UTF-8").split("\n").head.trim)
+    tdir.resolve(MetaStore.lines(tdir.resolve("_current")).head)
   }
 
-  /** Version-relative data-file path -> inode of one version dir
-    * (delete-sidecar files excluded; `keep` narrows further) — the ONE
-    * walker every zero-rewrite gate pins hard links with. */
-  private def gmaDataInodes(v: java.nio.file.Path,
-      keep: String => Boolean = _ => true): Map[String, Any] = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(v)
-    try walk.iterator().asScala.filter { p =>
-      val n = p.getFileName.toString
-      val rel = v.relativize(p).toString
-      java.nio.file.Files.isRegularFile(p) && !n.startsWith("_") &&
-        !n.startsWith(".") && !rel.startsWith("_deletes/") && keep(rel)
-    }.map(p => v.relativize(p).toString ->
-      java.nio.file.Files.getAttribute(p, "unix:ino")).toMap
-    finally walk.close()
+  /** Version-relative data-file path -> inode of one version dir's data
+    * files (`keep` narrows further) — the ONE walker every zero-rewrite
+    * gate pins hard links with. */
+  private[graft] def dataInodes(v: java.nio.file.Path,
+      keep: String => Boolean = _ => true): Map[String, Any] =
+    MetaStore.walkData(v)(_.collect {
+      case p if keep(v.relativize(p).toString) => v.relativize(p).toString ->
+        java.nio.file.Files.getAttribute(p, "unix:ino")
+    }.toMap)
+
+  /** How many of `head`'s live delete entries end in `suffix`. */
+  private def gmaSidecars(head: java.nio.file.Path, suffix: String): Int = {
+    val d = head.resolve("_deletes")
+    if (!java.nio.file.Files.isDirectory(d)) 0
+    else MetaStore.list(d).count(_.getFileName.toString.endsWith(suffix))
   }
 
   /** q102: MERGE-ON-READ MERGE (DeltaRowLevel.scala) — Iceberg v2's
@@ -1361,7 +1361,7 @@ object Extras {
       .partitionedBy($"o_orderstatus").create()
     s.sql("ALTER TABLE graft_ma.db.ord_mm " +
       "ADD CONSTRAINT ord_mm_pk PRIMARY KEY (o_orderkey) NOT ENFORCED")
-    def inodes(): Map[String, Any] = gmaDataInodes(gmaHeadDir(s, "ord_mm"))
+    def inodes(): Map[String, Any] = dataInodes(gmaHeadDir(s, "ord_mm"))
     val before = inodes()
     // matched keys hit every o_orderstatus partition (modulo sweeps the
     // key space); unmatched keys land in a NEW partition 'Z'
@@ -1470,7 +1470,7 @@ object Extras {
       .partitionedBy($"event_type").create()
     s.sql("ALTER TABLE graft_ma.db.ev_mm2 ADD CONSTRAINT ev_mm2_pk " +
       "PRIMARY KEY (user_id, event_id) NOT ENFORCED")
-    def inodes(): Map[String, Any] = gmaDataInodes(gmaHeadDir(s, "ev_mm2"))
+    def inodes(): Map[String, Any] = dataInodes(gmaHeadDir(s, "ev_mm2"))
     val before = inodes()
     // matched composite keys hit every event_type partition (the mod
     // sweeps event ids across all types and users); unmatched keys
@@ -1543,9 +1543,6 @@ object Extras {
       s.sql("DELETE FROM graft_ma.db.unify WHERE user_id >= 10 AND user_id <= 40")
     }
     def headDir(): java.nio.file.Path = gmaHeadDir(s, "unify")
-    def dataInodes(v: java.nio.file.Path,
-        prefix: String => Boolean): Map[String, Any] =
-      gmaDataInodes(v, prefix)
     val pre = headDir()
     require(java.nio.file.Files.exists(pre.resolve("_legacy_specs.txt")),
       "q105 setup: the evolve must have left a legacy sidecar")
@@ -1605,7 +1602,7 @@ object Extras {
       .tableProperty("write.merge.mode", "merge-on-read")
       .tableProperty("write.delete.mode", "merge-on-read")
       .partitionedBy($"o_orderstatus").create()
-    def inodes(): Map[String, Any] = gmaDataInodes(gmaHeadDir(s, "ord_pos"))
+    def inodes(): Map[String, Any] = dataInodes(gmaHeadDir(s, "ord_pos"))
     val before = inodes()
     Tables.load(s, dir, "orders")
       .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice")
@@ -1763,7 +1760,7 @@ object Extras {
             |FROM q109_seed""".stripMargin)
     s.sql("ALTER TABLE graft_ma.db.dim_mi ADD CONSTRAINT dim_mi_pk " +
       "PRIMARY KEY (user_id, event_id) NOT ENFORCED")
-    def inodes(): Map[String, Any] = gmaDataInodes(gmaHeadDir(s, "dim_mi"))
+    def inodes(): Map[String, Any] = dataInodes(gmaHeadDir(s, "dim_mi"))
     val before = inodes()
     // surrogate keys the matched rows carry BEFORE the merge — the
     // update must not lose or re-allocate them (bounded collect: the
@@ -1867,26 +1864,12 @@ object Extras {
     s.sql("UPDATE graft_ma.db.ord_exp SET o_totalprice = " +
       "o_totalprice + CAST(5.0 AS DOUBLE) WHERE o_custkey % 31 = 0")
     val head = gmaHeadDir(s, "ord_exp")
-    def sidecars(suffix: String): Int = {
-      val d = head.resolve("_deletes")
-      if (!java.nio.file.Files.isDirectory(d)) 0
-      else {
-        import scala.jdk.CollectionConverters._
-        val ls = java.nio.file.Files.list(d)
-        try ls.iterator().asScala
-          .count(_.getFileName.toString.endsWith(suffix))
-        finally ls.close()
-      }
-    }
+    def sidecars(suffix: String): Int = gmaSidecars(head, suffix)
     require(sidecars(".pred") >= 1 && sidecars(".pos") >= 1,
       s"q110 needs BOTH live sidecar kinds at export time, got " +
         s"pred=${sidecars(".pred")} pos=${sidecars(".pos")}")
     val dst = java.nio.file.Paths.get(MorExportDir)
-    if (java.nio.file.Files.exists(dst)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dst).iterator().asScala.toSeq
-        .reverse.foreach(java.nio.file.Files.delete)
-    }
+    MetaStore.deleteTree(dst)
     graft.sources.AtomicParquetCatalog
       .exportVersionDirMaterialized(s, head, dst)
     require(sidecars(".pred") >= 1 && sidecars(".pos") >= 1,
@@ -2051,17 +2034,7 @@ object Extras {
     s.sql("ALTER TABLE graft_ma.db.ord_cnt DROP CONSTRAINT ord_cnt_pk")
     s.sql("DELETE FROM graft_ma.db.ord_cnt WHERE o_custkey % 31 = 0")
     val head = gmaHeadDir(s, "ord_cnt")
-    def sidecars(suffix: String): Int = {
-      val d = head.resolve("_deletes")
-      if (!java.nio.file.Files.isDirectory(d)) 0
-      else {
-        import scala.jdk.CollectionConverters._
-        val ls = java.nio.file.Files.list(d)
-        try ls.iterator().asScala
-          .count(_.getFileName.toString.endsWith(suffix))
-        finally ls.close()
-      }
-    }
+    def sidecars(suffix: String): Int = gmaSidecars(head, suffix)
     require(sidecars(".pred") >= 1 && sidecars(".pos") >= 1,
       s"q113 needs BOTH live sidecar kinds, got " +
         s"pred=${sidecars(".pred")} pos=${sidecars(".pos")}")
@@ -2129,17 +2102,7 @@ object Extras {
     s.sql("ALTER TABLE graft_ma.db.ord_cntp DROP CONSTRAINT ord_cntp_pk")
     s.sql("DELETE FROM graft_ma.db.ord_cntp WHERE o_custkey % 31 = 0")
     val head = gmaHeadDir(s, "ord_cntp")
-    def sidecars(suffix: String): Int = {
-      val d = head.resolve("_deletes")
-      if (!java.nio.file.Files.isDirectory(d)) 0
-      else {
-        import scala.jdk.CollectionConverters._
-        val ls = java.nio.file.Files.list(d)
-        try ls.iterator().asScala
-          .count(_.getFileName.toString.endsWith(suffix))
-        finally ls.close()
-      }
-    }
+    def sidecars(suffix: String): Int = gmaSidecars(head, suffix)
     require(sidecars(".pred") >= 1 && sidecars(".pos") >= 1,
       s"q114 needs BOTH live sidecar kinds, got " +
         s"pred=${sidecars(".pred")} pos=${sidecars(".pos")}")
@@ -2347,13 +2310,7 @@ object Extras {
       .properties().get(org.apache.spark.sql.connector.catalog.TableCatalog.PROP_LOCATION)
     val src = java.nio.file.Paths.get(loc)
     val dst = java.nio.file.Paths.get(CatalogExternalExportDir)
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .reverse.foreach(java.nio.file.Files.delete)
-      }
-    rmTree(dst)
+    MetaStore.deleteTree(dst)
     graft.sources.AtomicParquetCatalog.exportVersionDir(src, dst)
     s.table("graft_ma.db.extval")
       .select($"s_suppkey", $"s_name", $"bal", $"grp", $"note")

@@ -143,25 +143,14 @@ object AtomicParquetCatalog {
   }
 
   private def linkExportTree(src: JPath, dst: JPath,
-      keep: String => Boolean): Unit = {
-    val walk = Files.walk(src)
-    try {
-      for (f <- walk.iterator().asScala if Files.isRegularFile(f)) {
-        val n = f.getFileName.toString
-        val rel = src.relativize(f).toString
-        if (!n.startsWith("_") && !n.startsWith(".") &&
-            PartitionRuntimeFilters.isDataRel(rel) && keep(rel)) {
-          val out = dst.resolve(src.relativize(f))
-          Files.createDirectories(out.getParent)
-          try { Files.createLink(out, f); () }
-          catch {
-            case _: UnsupportedOperationException | _: java.io.IOException =>
-              Files.copy(f, out, StandardCopyOption.REPLACE_EXISTING); ()
-          }
-        }
+      keep: String => Boolean): Unit =
+    MetaStore.walkData(src)(_.foreach { f =>
+      if (keep(src.relativize(f).toString)) {
+        val out = dst.resolve(src.relativize(f))
+        MetaStore.mkdirs(out.getParent)
+        MetaStore.linkOrCopy(f, out)
       }
-    } finally walk.close() // NIO walk streams hold directory handles
-  }
+    })
 
   /** [[exportVersionDir]] for a version carrying LIVE merge-on-read
     * delete entries: the deletes MATERIALIZE ON THE WAY OUT. Files no
@@ -177,17 +166,17 @@ object AtomicParquetCatalog {
     * narrowing, so a targeted delete exports with a targeted rewrite. */
   def exportVersionDirMaterialized(spark: SparkSession, src: JPath,
       dst: JPath): Unit = {
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(src.resolve("_schema.json")), "UTF-8"))
-      .asInstanceOf[StructType]
-    val pf = src.resolve("_partitions.txt")
-    val fields =
-      if (!Files.exists(pf)) Nil
-      else new String(Files.readAllBytes(pf), "UTF-8")
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        .map(PartitionField.parseLine)
+    val (schema, fields) = readMeta(src)
     exportVersionDirMaterialized(spark, src, dst, schema, fields)
   }
+
+  /** A version's schema and partition spec. */
+  private[sources] def readMeta(versionDir: JPath)
+      : (StructType, Seq[PartitionField]) =
+    (DataType.fromJson(MetaStore.read(versionDir.resolve("_schema.json")))
+      .asInstanceOf[StructType],
+      MetaStore.lines(versionDir.resolve("_partitions.txt"))
+        .map(PartitionField.parseLine))
 
   private[sources] def exportVersionDirMaterialized(spark: SparkSession,
       src: JPath, dst: JPath, schema: StructType,
@@ -195,7 +184,7 @@ object AtomicParquetCatalog {
     val es = MorDeletes.entries(src)
     val pes = MorDeletes.posEntries(src)
     if (es.isEmpty && pes.isEmpty) { linkExportTree(src, dst, _ => true); return }
-    val liveRels = walkDataFiles(src)
+    val liveRels = MetaStore.dataFiles(src)
       .map(p => src.relativize(Paths.get(p)).toString).toSet
     val stats = FileStats.load(src.getParent)
     val blooms = BloomIndex.loadIfEnabled(src.getParent, spark)
@@ -218,51 +207,6 @@ object AtomicParquetCatalog {
         .parquet(dst.toString)
     }
   }
-
-  /** Every data file under `root` (absolute path strings, sorted) —
-    * the explicit-leaf enumeration needed wherever a `_spec-<k>`
-    * legacy subtree must be read: its underscore root would be dropped
-    * by Spark's hidden-path listing filter, but explicitly-passed LEAF
-    * files (and their `k=v` partition dirs) pass it. */
-  /** Persisted TBLPROPERTIES of a table directory (see the class-side
-    * doc at writeProps) — static so write paths owned by table objects
-    * can consult them without a catalog instance. */
-  private[sources] def readProps(dir: JPath): Map[String, String] = {
-    val p = dir.resolve("_props")
-    if (!Files.exists(p)) Map.empty
-    else new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
-      .map(_.trim).filter(_.nonEmpty)
-      .map { l => val Array(n, v) = l.split("\t", 2); n -> v }.toMap
-  }
-
-  private[sources] def walkDataFiles(root: JPath): Seq[String] = {
-    if (!Files.isDirectory(root)) return Nil
-    val walk = Files.walk(root)
-    try walk.iterator().asScala.collect {
-      case p if Files.isRegularFile(p) &&
-          !p.getFileName.toString.startsWith("_") &&
-          !p.getFileName.toString.startsWith(".") &&
-          PartitionRuntimeFilters.isDataRel(
-            root.relativize(p).toString) => p.toString
-    }.toSeq.sorted
-    finally walk.close() // NIO walk streams hold directory handles
-  }
-
-  /** Hard-link `src` to `dst` (fall back: copy, for filesystems
-    * without links) — the single-file unit of every no-data-copy path. */
-  private[sources] def linkOrCopy(src: JPath, dst: JPath): Unit = {
-    Files.createDirectories(dst.getParent)
-    try { Files.createLink(dst, src); () }
-    catch {
-      case _: UnsupportedOperationException | _: java.io.IOException =>
-        Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING); ()
-    }
-  }
-
-  private[sources] def deleteTree(p: JPath): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
 
   /** Write `df` into `target` as a hive-partitioned parquet layout
     * under `fields` — the one write-time router shared by every path
@@ -290,7 +234,7 @@ object AtomicParquetCatalog {
     // partitioned tables keep their partition clustering and sort
     // WITHIN it (partition dirs already split the space — a range
     // exchange would re-scatter dir values into tasks x dirs files).
-    val props = readProps(tableDir) // one sidecar read per write
+    val props = MetaStore.readProps(tableDir) // one sidecar read per write
     val sortCols = props.get("write.sort-cols")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .filter(_.nonEmpty)
@@ -406,7 +350,7 @@ object AtomicParquetCatalog {
         "back is outside the retention window")
     // oldest-first chain fromCommitsBack → toCommitsBack
     val chain = log.slice(toCommitsBack, fromCommitsBack + 1).reverse
-    val (latestSchema, _) = plugin.readMetaOf(dir.resolve(log(toCommitsBack)))
+    val (latestSchema, _) = readMeta(dir.resolve(log(toCommitsBack)))
     val outCols = latestSchema.fieldNames.toSeq.map(col) ++
       Seq(col("_change_type"), col("_commit_step"), col("_commit_version"))
 
@@ -425,7 +369,7 @@ object AtomicParquetCatalog {
       if (!Files.isDirectory(vd)) throw new IllegalStateException(
         s"$table: version $v is no longer retained — the change window " +
           "spans an expired snapshot")
-      walkDataFiles(vd).map(f => vd.relativize(Paths.get(f)).toString).toSet
+      MetaStore.dataFiles(vd).map(f => vd.relativize(Paths.get(f)).toString).toSet
     }
 
     val steps = chain.sliding(2).zipWithIndex.collect {
@@ -435,18 +379,8 @@ object AtomicParquetCatalog {
         // DeltaRowLevel's `_cdc_types` marker) named its preimage
         // entry and postimage files at commit time — the SQL surface
         // serves the same four-way typing as the `.changes` relation
-        val (preEntries, postRels) = {
-          val m = dir.resolve(next).resolve(DeltaRowLevel.CdcTypesMarker)
-          if (!Files.exists(m)) (Set.empty[String], Set.empty[String])
-          else {
-            val ls = new String(Files.readAllBytes(m), "UTF-8")
-              .split("\n").toSeq.filter(_.nonEmpty)
-            (ls.collect { case l if l.startsWith("preimage\t") =>
-              l.substring("preimage\t".length) }.toSet,
-              ls.collect { case l if l.startsWith("postimage\t") =>
-                l.substring("postimage\t".length) }.toSet)
-          }
-        }
+        val (preEntries, postRels) =
+          DeltaRowLevel.readCdcTypes(dir.resolve(next))
         val addedAll = rowsOf(dir.resolve(next), nf -- pf)
         val removed = rowsOf(dir.resolve(prev), pf -- nf)
         // a MERGE-ON-READ delete commit moves no files; its removed
@@ -541,6 +475,7 @@ object AtomicParquetCatalog {
 
 class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     with SupportsNamespaces with ProcedureCatalog with FunctionCatalog {
+  import AtomicParquetCatalog.readMeta
 
   private var catalogName: String = _
   private var warehouse: JPath = _
@@ -561,7 +496,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     require(historyKeep >= 0, s"catalog $name: history must be >= 0")
     lockStaleMs = Option(options.get("lockStaleMs")).map(_.toLong)
       .getOrElse(600000L)
-    Files.createDirectories(warehouse)
+    MetaStore.mkdirs(warehouse)
   }
 
   override def name(): String = catalogName
@@ -577,8 +512,6 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
       TableCatalogCapability.SUPPORTS_CREATE_TABLE_WITH_IDENTITY_COLUMNS)
 
   private[sources] def warehouseDir: JPath = warehouse
-  private[sources] def readMetaOf(versionDir: JPath): (StructType, Seq[PartitionField]) =
-    readMeta(versionDir)
 
   private def spark: SparkSession = SparkSession.active
 
@@ -601,12 +534,8 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
   private[graft] def versionLog(dir: JPath): Seq[String] =
     versionLog(dir, AtomicParquetCatalog.MainRef)
 
-  private[sources] def versionLog(dir: JPath, ref: String): Seq[String] = {
-    val p = dir.resolve(ref)
-    if (!Files.exists(p)) Nil
-    else new String(Files.readAllBytes(p), "UTF-8")
-      .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-  }
+  private[sources] def versionLog(dir: JPath, ref: String): Seq[String] =
+    MetaStore.lines(dir.resolve(ref))
 
   /** Branch-name charset gate shared by every procedure that resolves
     * `_branch_<name>` as a path: [A-Za-z0-9_-]+ only, so a crafted
@@ -622,11 +551,9 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
   /** Live branch names of `dir` (without the `_branch_` prefix). */
   private[sources] def listBranches(dir: JPath): Seq[String] = {
     if (!Files.isDirectory(dir)) return Nil
-    val ls = Files.list(dir)
-    try ls.iterator().asScala.map(_.getFileName.toString)
+    MetaStore.list(dir).map(_.getFileName.toString)
       .filter(n => n.startsWith("_branch_") && !n.contains(".tmp-"))
-      .map(_.stripPrefix("_branch_")).toSeq.sorted
-    finally ls.close()
+      .map(_.stripPrefix("_branch_")).sorted
   }
 
   /** Versions referenced by tags or by any pointer log OTHER than
@@ -722,14 +649,10 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
       // timestamp windows resolve against, so two commits landing in one
       // clock millisecond must never tie
       try {
-        val prevMs = old.headOption.flatMap { h =>
-          try Some(new String(Files.readAllBytes(
-            dir.resolve(h).resolve("_committed_at")), "UTF-8").trim.toLong)
-          catch { case _: Exception => None }
-        }.getOrElse(0L)
-        Files.write(dir.resolve(version).resolve("_committed_at"),
-          String.valueOf(math.max(System.currentTimeMillis(), prevMs + 1))
-            .getBytes("UTF-8"))
+        val prevMs = old.headOption
+          .flatMap(h => MetaStore.committedAt(dir.resolve(h))).getOrElse(0L)
+        MetaStore.write(dir.resolve(version).resolve("_committed_at"),
+          String.valueOf(math.max(System.currentTimeMillis(), prevMs + 1)))
       }
       catch {
         case e: java.io.IOException =>
@@ -771,58 +694,33 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     def youngEnough(v: String): Boolean =
       keepNewerThanMs.exists(_ <= versionCommitMs(dir, v))
     val kept = window ++ tail.filter(v => pinned(v) || youngEnough(v))
-    val tmp = dir.resolve(s"$ref.tmp-${UUID.randomUUID()}")
-    Files.write(tmp, kept.mkString("\n").getBytes("UTF-8"))
-    Files.move(tmp, dir.resolve(ref), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    MetaStore.replace(dir.resolve(ref), kept.mkString("\n"))
     val deleted = tail.filterNot(v => pinned(v) || youngEnough(v))
-    deleted.foreach(v => deleteRecursively(dir.resolve(v)))
+    deleted.foreach(v => MetaStore.deleteTree(dir.resolve(v)))
     (deleted, kept)
   }
 
-  /** A version's commit time in epoch millis — the `_committed_at`
-    * sidecar when present, the directory mtime otherwise (the same
-    * resolution `.history`'s committed_at column uses). */
+  /** A version's commit time in epoch millis; an unknowable one keeps
+    * the version. */
   private def versionCommitMs(dir: JPath, v: String): Long =
-    try new String(Files.readAllBytes(
-      dir.resolve(v).resolve("_committed_at")), "UTF-8").trim.toLong
-    catch {
-      case _: Exception =>
-        try Files.getLastModifiedTime(dir.resolve(v)).toMillis
-        catch { case _: Exception => Long.MaxValue } // unknowable: keep
-    }
+    MetaStore.committedAt(dir.resolve(v)).getOrElse(Long.MaxValue)
 
   /** Named snapshot refs (tags): `_refs` holds `name<TAB>version` lines,
     * swapped atomically like the pointer; tag writes happen under the
     * commit lock. Tag names resolve in `VERSION AS OF '<name>'` and
     * shield their version from retention vacuum. */
-  private[graft] def readRefs(dir: JPath): Map[String, String] = {
-    val p = dir.resolve("_refs")
-    if (!Files.exists(p)) Map.empty
-    else new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
-      .map(_.trim).filter(_.nonEmpty)
-      .map { l => val Array(n, v) = l.split("\t", 2); n -> v }.toMap
-  }
+  private[graft] def readRefs(dir: JPath): Map[String, String] =
+    MetaStore.tsvMap(dir.resolve("_refs"))
 
-  /** Persisted TABLE PROPERTIES — a `_props` sidecar at the TABLE
-    * level, refs-shaped (tab-separated lines, atomic swap): the
+  /** Persisted TABLE PROPERTIES ([[MetaStore.readProps]]): the
     * `TBLPROPERTIES` surface a lakehouse table owes its operators
     * (`write.delete.mode = merge-on-read` is the load-bearing one —
-    * see MorDeletes). Properties are table-scoped rather than
-    * snapshot-scoped BY CHOICE: they configure future behavior, so
-    * pinning them to time-traveled snapshots would only let an old
-    * reader resurrect an old write mode. Reserved catalog keys
-    * (provider/location/owner) are never persisted. */
-  private[sources] def readProps(dir: JPath): Map[String, String] =
-    AtomicParquetCatalog.readProps(dir)
-
+    * see MorDeletes). Reserved catalog keys (provider/location/owner)
+    * are never persisted. */
   private def writeProps(dir: JPath, props: Map[String, String]): Unit = {
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s"_props.tmp-${UUID.randomUUID()}")
-    Files.write(tmp, props.toSeq.sorted.map { case (n, v) => s"$n\t$v" }
-      .mkString("\n").getBytes("UTF-8"))
-    Files.move(tmp, dir.resolve("_props"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    MetaStore.mkdirs(dir)
+    MetaStore.replace(dir.resolve("_props"),
+      props.toSeq.sorted.map { case (n, v) => s"$n\t$v" }.mkString("\n"))
   }
 
   private val reservedProps =
@@ -835,26 +733,15 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
         !k.toLowerCase.startsWith("option.")
     }
 
-  private def writeRefs(dir: JPath, refs: Map[String, String]): Unit = {
-    val tmp = dir.resolve(s"_refs.tmp-${UUID.randomUUID()}")
-    Files.write(tmp, refs.toSeq.sorted.map { case (n, v) => s"$n\t$v" }
-      .mkString("\n").getBytes("UTF-8"))
-    Files.move(tmp, dir.resolve("_refs"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeRefs(dir: JPath, refs: Map[String, String]): Unit =
+    MetaStore.replace(dir.resolve("_refs"),
+      refs.toSeq.sorted.map { case (n, v) => s"$n\t$v" }.mkString("\n"))
 
   private def withCommitLock[A](dir: JPath)(body: => A): A = {
     val lock = dir.resolve("_commit.lock")
     val owner = UUID.randomUUID().toString
     def acquire(retriesLeft: Int): Unit = {
-      val acquired =
-        try {
-          Files.write(lock, owner.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      if (!acquired) {
+      if (!MetaStore.createNew(lock, owner)) {
         val age = try System.currentTimeMillis() -
           Files.getLastModifiedTime(lock).toMillis
         catch { case _: java.io.IOException => 0L } // lock just released
@@ -863,8 +750,8 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
           // wins the move and proceeds; the losers find the lock gone and
           // simply re-race on createFile
           val tomb = dir.resolve(s"_commit.lock.broken-${UUID.randomUUID()}")
-          try { Files.move(lock, tomb, StandardCopyOption.ATOMIC_MOVE)
-                Files.deleteIfExists(tomb); () }
+          try { MetaStore.move(lock, tomb, StandardCopyOption.ATOMIC_MOVE)
+                MetaStore.delete(tomb); () }
           catch { case _: java.io.IOException => () }
           if (retriesLeft > 0) acquire(retriesLeft - 1)
           else throw new java.util.ConcurrentModificationException(
@@ -881,9 +768,8 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
       // delete only OUR lock: if a breaker removed it and another writer
       // acquired, the token no longer matches and we must not cascade
       try {
-        if (Files.exists(lock) &&
-            new String(Files.readAllBytes(lock), "UTF-8") == owner)
-          Files.deleteIfExists(lock)
+        if (Files.exists(lock) && MetaStore.read(lock) == owner)
+          MetaStore.delete(lock)
       } catch { case _: java.io.IOException => () }
       ()
     }
@@ -895,10 +781,10 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
 
   private def writeMeta(versionDir: JPath, schema: StructType,
                         fields: Seq[PartitionField]): Unit = {
-    Files.createDirectories(versionDir)
-    Files.write(versionDir.resolve("_schema.json"), schema.json.getBytes("UTF-8"))
-    Files.write(versionDir.resolve("_partitions.txt"),
-      PartitionField.serialize(fields).getBytes("UTF-8"))
+    MetaStore.mkdirs(versionDir)
+    MetaStore.write(versionDir.resolve("_schema.json"), schema.json)
+    MetaStore.write(versionDir.resolve("_partitions.txt"),
+      PartitionField.serialize(fields))
   }
 
   /** Legacy partition specs of a MIXED-SPEC version — the sidecar
@@ -909,10 +795,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     * pre-evolution table), zero behavior change. */
   private[sources] def readLegacySpecs(versionDir: JPath)
       : Seq[(String, Seq[PartitionField])] = {
-    val f = versionDir.resolve("_legacy_specs.txt")
-    if (!Files.exists(f)) Nil
-    else new String(Files.readAllBytes(f), "UTF-8")
-      .split("\n").toSeq.map(_.trim).filter(_.nonEmpty).map { l =>
+    MetaStore.lines(versionDir.resolve("_legacy_specs.txt")).map { l =>
         // an UNPARTITIONED legacy layout serializes as `sub<TAB>` —
         // the trim above eats the trailing tab, so a tab-less line is
         // that spec (empty field list), not a malformed file
@@ -927,10 +810,10 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
   private def writeLegacySpecs(versionDir: JPath,
       specs: Seq[(String, Seq[PartitionField])]): Unit =
     if (specs.nonEmpty)
-      Files.write(versionDir.resolve("_legacy_specs.txt"),
+      MetaStore.write(versionDir.resolve("_legacy_specs.txt"),
         specs.map { case (sub, fs) =>
           s"$sub\t${fs.map(PartitionField.show).mkString(", ")}"
-        }.mkString("\n").getBytes("UTF-8"))
+        }.mkString("\n"))
 
   /** Carry a version's legacy-spec sidecar into a successor version
     * whose data files were hard-linked from it — every metadata-only
@@ -940,23 +823,10 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
   private[sources] def carryLegacySpecs(from: JPath, to: JPath): Unit = {
     val f = from.resolve("_legacy_specs.txt")
     if (Files.exists(f))
-      Files.copy(f, to.resolve("_legacy_specs.txt"),
+      MetaStore.copy(f, to.resolve("_legacy_specs.txt"),
         StandardCopyOption.REPLACE_EXISTING)
-    ()
   }
 
-  private def readMeta(versionDir: JPath): (StructType, Seq[PartitionField]) = {
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(versionDir.resolve("_schema.json")), "UTF-8"))
-      .asInstanceOf[StructType]
-    val pf = versionDir.resolve("_partitions.txt")
-    val fields =
-      if (!Files.exists(pf)) Nil
-      else new String(Files.readAllBytes(pf), "UTF-8")
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        .map(PartitionField.parseLine)
-    (schema, fields)
-  }
 
   /** Partition transforms a parquet directory layout can express:
     * `identity(col)` (a directory level per value) and `bucket(n, col)`
@@ -1040,17 +910,12 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     }
   }
 
-  private def deleteRecursively(p: JPath): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
-
   // ---- TableCatalog ----
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val d = nsDir(namespace)
     if (!Files.isDirectory(d)) throw new NoSuchNamespaceException(namespace)
-    Files.list(d).iterator().asScala
+    MetaStore.list(d)
       .filter(p => Files.exists(pointer(p)))
       .map(p => Identifier.of(namespace, p.getFileName.toString))
       .toArray
@@ -1117,20 +982,10 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     val pdir = nsDir(ident.namespace.init).resolve(pBase)
     if (!Files.exists(pointer(pdir))) return None
 
-    def dataFiles(v: JPath): Seq[JPath] =
-      Files.walk(v).iterator().asScala.filter(p => Files.isRegularFile(p) &&
-        !p.getFileName.toString.startsWith("_") &&
-        !p.getFileName.toString.startsWith(".") &&
-        PartitionRuntimeFilters.isDataRel(v.relativize(p).toString)).toSeq
+    def dataFiles(v: JPath): Seq[JPath] = MetaStore.walkData(v)(_.toList)
 
     def commitMs(v: String): Long =
-      try new String(Files.readAllBytes(
-        pdir.resolve(v).resolve("_committed_at")), "UTF-8").trim.toLong
-      catch {
-        case _: Exception =>
-          try Files.getLastModifiedTime(pdir.resolve(v)).toMillis
-          catch { case _: java.io.IOException => 0L }
-      }
+      MetaStore.committedAt(pdir.resolve(v)).getOrElse(0L)
 
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
@@ -1241,8 +1096,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
           val f = currentVersion(pdir).get.resolve("_stats")
           if (!Files.exists(f)) Nil
           else {
-            val all = new String(Files.readAllBytes(f), "UTF-8")
-              .split("\n").toSeq
+            val all = MetaStore.read(f).split("\n").toSeq
             val nRows = all.head.trim.toLong
             def dec(s: String): UTF8String =
               if (s == "n") null
@@ -1384,13 +1238,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     if (log.isEmpty) throw new NoSuchTableException(ident)
     val tsMs = timestamp / 1000L
     def commitMs(v: String): Long =
-      try new String(Files.readAllBytes(
-        dir.resolve(v).resolve("_committed_at")), "UTF-8").trim.toLong
-      catch {
-        case _: Exception =>
-          try Files.getLastModifiedTime(dir.resolve(v)).toMillis
-          catch { case _: java.io.IOException => Long.MaxValue }
-      }
+      MetaStore.committedAt(dir.resolve(v)).getOrElse(Long.MaxValue)
     // log is newest-first: the first entry at or before ts is the answer
     val resolved = log.find(v => commitMs(v) <= tsMs).getOrElse(
       throw new IllegalArgumentException(
@@ -1620,7 +1468,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
       }
     }
     if (propChanges.nonEmpty) withCommitLock(dir) {
-      val next = propChanges.foldLeft(readProps(dir)) { (ps, c) =>
+      val next = propChanges.foldLeft(MetaStore.readProps(dir)) { (ps, c) =>
         c match {
           case s: TableChange.SetProperty =>
             require(!reservedProps.contains(s.property.toLowerCase),
@@ -1788,7 +1636,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     refuseBranchIdent(ident, "DROP TABLE")
     val dir = tableDir(ident)
     val existed = Files.exists(pointer(dir))
-    deleteRecursively(dir)
+    MetaStore.deleteTree(dir)
     existed
   }
 
@@ -1797,8 +1645,8 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     refuseBranchIdent(newIdent, "RENAME TABLE")
     if (!tableExists(oldIdent)) throw new NoSuchTableException(oldIdent)
     if (tableExists(newIdent)) throw new TableAlreadyExistsException(newIdent)
-    Files.createDirectories(tableDir(newIdent).getParent)
-    Files.move(tableDir(oldIdent), tableDir(newIdent))
+    MetaStore.mkdirs(tableDir(newIdent).getParent)
+    MetaStore.move(tableDir(oldIdent), tableDir(newIdent))
   }
 
   // ---- StagingTableCatalog: stage into a fresh version dir; visibility
@@ -1845,7 +1693,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
       ref: String = AtomicParquetCatalog.MainRef): Unit =
     commitPointer(dir, version, expectedBase, ref)
 
-  private[sources] def dropOrphan(p: JPath): Unit = deleteRecursively(p)
+  private[sources] def dropOrphan(p: JPath): Unit = MetaStore.deleteTree(p)
 
   /** Hard-link (fall back: copy) every data file of `from` into `to`,
     * preserving the partition-directory layout — the no-data-copy half of
@@ -1855,34 +1703,16 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     * from two different writes cannot collide. */
   private[sources] def linkDataFiles(from: JPath, to: JPath,
       keepPartition: String => Boolean = _ => true,
-      keepFile: String => Boolean = _ => true): Unit = {
-    val walk = Files.walk(from)
-    try linkDataFilesFrom(walk.iterator().asScala, from, to, keepPartition,
-      keepFile)
-    finally walk.close() // NIO walk streams hold directory handles
-  }
-
-  private def linkDataFilesFrom(it: Iterator[JPath], from: JPath, to: JPath,
-      keepPartition: String => Boolean,
-      keepFile: String => Boolean): Unit = {
-    for (src <- it if Files.isRegularFile(src)) {
-      val name = src.getFileName.toString
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        val rel = from.relativize(src)
-        val partDir = Option(rel.getParent).map(_.toString).getOrElse("")
-        if (PartitionRuntimeFilters.isDataRel(rel.toString) &&
-            keepPartition(partDir) && keepFile(rel.toString)) {
-          val dst = to.resolve(rel)
-          Files.createDirectories(dst.getParent)
-          try { Files.createLink(dst, src); () }
-          catch { // filesystem without hard links: copy is still correct
-            case _: UnsupportedOperationException | _: java.io.IOException =>
-              Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING); ()
-          }
-        }
+      keepFile: String => Boolean = _ => true): Unit =
+    MetaStore.walkData(from)(_.foreach { src =>
+      val rel = from.relativize(src)
+      val partDir = Option(rel.getParent).map(_.toString).getOrElse("")
+      if (keepPartition(partDir) && keepFile(rel.toString)) {
+        val dst = to.resolve(rel)
+        MetaStore.mkdirs(dst.getParent)
+        MetaStore.linkOrCopy(src, dst)
       }
-    }
-  }
+    })
 
   /** The distinct partition directories holding data files under a
     * version dir ("" for unpartitioned files at the root), excluding
@@ -1896,14 +1726,14 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
   override def defaultNamespace(): Array[String] = Array.empty
 
   override def listNamespaces(): Array[Array[String]] =
-    Files.list(warehouse).iterator().asScala.filter(Files.isDirectory(_))
+    MetaStore.list(warehouse).filter(Files.isDirectory(_))
       .map(p => Array(p.getFileName.toString)).toArray
 
   override def listNamespaces(namespace: Array[String]): Array[Array[String]] = {
     if (namespace.isEmpty) return listNamespaces()
     val d = nsDir(namespace)
     if (!Files.isDirectory(d)) throw new NoSuchNamespaceException(namespace)
-    Files.list(d).iterator().asScala
+    MetaStore.list(d)
       .filter(p => Files.isDirectory(p) && !Files.exists(pointer(p)))
       .map(p => namespace :+ p.getFileName.toString).toArray
   }
@@ -1918,8 +1748,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
 
   override def createNamespace(namespace: Array[String],
                                metadata: java.util.Map[String, String]): Unit = {
-    Files.createDirectories(nsDir(namespace))
-    ()
+    MetaStore.mkdirs(nsDir(namespace))
   }
 
   override def alterNamespace(namespace: Array[String],
@@ -1929,9 +1758,9 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
   override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean = {
     val d = nsDir(namespace)
     if (!Files.isDirectory(d)) return false
-    if (!cascade && Files.list(d).iterator().asScala.nonEmpty)
+    if (!cascade && MetaStore.list(d).nonEmpty)
       throw new IllegalStateException(s"namespace ${namespace.mkString(".")} not empty")
-    deleteRecursively(d)
+    MetaStore.deleteTree(d)
     true
   }
 
@@ -2005,7 +1834,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     // (which is why compact/rewrite_layout clear the sidecar: their
     // output files are new and already clean)
     if (MorDeletes.hasLive(versionDir)) {
-      val rels = AtomicParquetCatalog.walkDataFiles(versionDir)
+      val rels = MetaStore.dataFiles(versionDir)
         .map(p => versionDir.relativize(java.nio.file.Paths.get(p)).toString)
         .toSet
       return MorDeletes.readFiles(spark, versionDir, rels, schema)
@@ -2019,7 +1848,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
       // explicitly, with basePath at the subtree so identity partition
       // values still parse out of the directory names
       val subDir = versionDir.resolve(sub)
-      val files = AtomicParquetCatalog.walkDataFiles(subDir)
+      val files = MetaStore.dataFiles(subDir)
       if (files.isEmpty) df
       else df.unionByName(
         spark.read.option("basePath", subDir.toString).schema(schema)
@@ -2038,8 +1867,8 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
     * are the only writers that KNOW the rewrite preserved content —
     * a genuine COW DELETE/MERGE keeps failing the feed pointedly. */
   private def markContentPreserving(nv: JPath, kind: String): Unit =
-    Files.write(nv.resolve(AtomicParquetCatalog.ContentPreservingMarker),
-      kind.getBytes("UTF-8"))
+    MetaStore.write(nv.resolve(AtomicParquetCatalog.ContentPreservingMarker),
+      kind)
 
   private def summaryScan(schema: StructType, row: InternalRow) =
     java.util.Collections.singletonList(
@@ -2207,7 +2036,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
               val prev = dir.resolve(log(idx + 1))
               val (schema, _) = readMeta(next)
               def liveDf(vd: JPath) = MorDeletes.readFiles(spark, vd,
-                AtomicParquetCatalog.walkDataFiles(vd)
+                MetaStore.dataFiles(vd)
                   .map(f => vd.relativize(Paths.get(f)).toString).toSet,
                 schema)
               val n = liveDf(next)
@@ -2258,12 +2087,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
             try commitPointer(dir, v, expectedBase = Some(base))
             catch { case e: Throwable => dropOrphan(nv); throw e }
             def nFiles(p: JPath): Long =
-              Files.walk(p).iterator().asScala.count(f =>
-                Files.isRegularFile(f) &&
-                  !f.getFileName.toString.startsWith("_") &&
-                  !f.getFileName.toString.startsWith(".") &&
-                  PartitionRuntimeFilters.isDataRel(
-                    p.relativize(f).toString))
+              MetaStore.walkData(p)(_.size.toLong)
             summaryScan(StructType(Seq(
               StructField("files_before", LongType, nullable = false),
               StructField("files_after", LongType, nullable = false),
@@ -2329,12 +2153,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
             try commitPointer(dir, v, expectedBase = Some(base))
             catch { case e: Throwable => dropOrphan(nv); throw e }
             def nFiles(p: JPath): Long =
-              Files.walk(p).iterator().asScala.count(f =>
-                Files.isRegularFile(f) &&
-                  !f.getFileName.toString.startsWith("_") &&
-                  !f.getFileName.toString.startsWith(".") &&
-                  PartitionRuntimeFilters.isDataRel(
-                    p.relativize(f).toString))
+              MetaStore.walkData(p)(_.size.toLong)
             summaryScan(StructType(Seq(
               StructField("clustered_by", StringType, nullable = false),
               StructField("files_written", LongType, nullable = false),
@@ -2370,7 +2189,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
             if (es.isEmpty && pes.isEmpty)
               return summaryScan(summarySchema,
                 InternalRow(0L, 0L, UTF8String.fromString(base)))
-            val liveRels = AtomicParquetCatalog.walkDataFiles(cur)
+            val liveRels = MetaStore.dataFiles(cur)
               .map(p => cur.relativize(Paths.get(p)).toString).toSet
             // a manifest file whose footer stats PROVE the entry's
             // predicate matches nothing needs no rewrite — the same
@@ -2581,7 +2400,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
             // the rewrite's input: ONLY the legacy subtrees' rows, each
             // read under its own layout with its delete entries applied
             // exactly (per-cohort), landed under the CURRENT spec
-            val legacyRels = AtomicParquetCatalog.walkDataFiles(cur)
+            val legacyRels = MetaStore.dataFiles(cur)
               .map(p => cur.relativize(java.nio.file.Paths.get(p)).toString)
               .filter(_.startsWith("_spec-")).toSet
             var rewritten = 0L
@@ -2635,10 +2454,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
                   "between tags and branches (both resolve in VERSION AS OF)")
               val log = versionLog(dir)
               require(log.nonEmpty, "cannot branch an uncommitted table")
-              val tmp = dir.resolve(s"_branch_$b.tmp-${UUID.randomUUID()}")
-              Files.write(tmp, log.mkString("\n").getBytes("UTF-8"))
-              Files.move(tmp, dir.resolve(s"_branch_$b"),
-                StandardCopyOption.ATOMIC_MOVE)
+              MetaStore.replace(dir.resolve(s"_branch_$b"), log.mkString("\n"))
               log.head
             }
             summaryScan(StructType(Seq(
@@ -2665,7 +2481,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
             // whole table head
             requireBranchNameShape(b)
             val existed = withCommitLock(dir) {
-              Files.deleteIfExists(dir.resolve(s"_branch_$b"))
+              MetaStore.delete(dir.resolve(s"_branch_$b"))
             }
             require(existed, s"no such branch '$b' (live: " +
               s"${listBranches(dir).mkString(", ")})")
@@ -2824,12 +2640,8 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
                 enc(row.getAs[String](s"__mx_$n")))
                 .mkString("\t")
             }
-            val tmp = cur.resolve(s"_stats.tmp-${UUID.randomUUID()}")
-            Files.write(tmp, (s"$nRows" +: lines.toSeq).mkString("\n")
-              .getBytes("UTF-8"))
-            Files.move(tmp, cur.resolve("_stats"),
-              StandardCopyOption.ATOMIC_MOVE,
-              StandardCopyOption.REPLACE_EXISTING)
+            MetaStore.replace(cur.resolve("_stats"),
+              (s"$nRows" +: lines.toSeq).mkString("\n"))
             summaryScan(StructType(Seq(
               StructField("analyzed_version", StringType, nullable = false),
               StructField("n_rows", LongType, nullable = false),
@@ -2871,7 +2683,7 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
             // footer the source already priced
             FileStats.carryStore(srcDir, dstDir)
             if (Files.exists(srcDir.resolve("_props")))
-              Files.copy(srcDir.resolve("_props"), dstDir.resolve("_props"),
+              MetaStore.copy(srcDir.resolve("_props"), dstDir.resolve("_props"),
                 StandardCopyOption.REPLACE_EXISTING)
             commitPointer(dstDir, v, expectedBase = None)
             summaryScan(StructType(Seq(
@@ -2904,18 +2716,15 @@ class AtomicParquetCatalog extends TableCatalog with StagingTableCatalog
               val live = versionLog(dir).toSet ++ readRefs(dir).values ++
                 listBranches(dir).flatMap(b => versionLog(dir, s"_branch_$b"))
               val cutoff = System.currentTimeMillis() - minAgeS * 1000L
-              val listing = Files.list(dir)
-              val candidates =
-                try listing.iterator().asScala.filter { p =>
-                  val n = p.getFileName.toString
-                  n.startsWith("v-") && !live.contains(n) &&
-                    Files.isDirectory(p) &&
-                    (try Files.getLastModifiedTime(p).toMillis < cutoff
-                     catch { case _: java.io.IOException => false })
-                }.toSeq
-                finally listing.close() // NIO list streams hold a dir handle
+              val candidates = MetaStore.list(dir).filter { p =>
+                val n = p.getFileName.toString
+                n.startsWith("v-") && !live.contains(n) &&
+                  Files.isDirectory(p) &&
+                  (try Files.getLastModifiedTime(p).toMillis < cutoff
+                   catch { case _: java.io.IOException => false })
+              }
               candidates.map { p =>
-                deleteRecursively(p); p.getFileName.toString
+                MetaStore.deleteTree(p); p.getFileName.toString
               }
             }
             summaryScan(StructType(Seq(
@@ -3120,7 +2929,7 @@ private[sources] final class PointerTable(
     * any scale, just not O(metadata). */
   private def morDeleteMode: Boolean =
     MorDeletes.morEnabled(spark) ||
-      catalog.readProps(dir).get("write.delete.mode")
+      MetaStore.readProps(dir).get("write.delete.mode")
         .contains("merge-on-read")
 
   override def canDeleteWhere(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Boolean =
@@ -3140,10 +2949,7 @@ private[sources] final class PointerTable(
       .reduce(MorDeletes.AndN(_, _))
     val v = s"v-${UUID.randomUUID()}"
     val nv = dir.resolve(v)
-    Files.createDirectories(nv)
-    Files.copy(versionDir.resolve("_schema.json"), nv.resolve("_schema.json"))
-    Files.copy(versionDir.resolve("_partitions.txt"),
-      nv.resolve("_partitions.txt"))
+    MetaStore.carrySpec(versionDir, nv)
     catalog.linkDataFiles(versionDir, nv)
     catalog.carryLegacySpecs(versionDir, nv)
     MorDeletes.carry(versionDir, nv)
@@ -3154,7 +2960,7 @@ private[sources] final class PointerTable(
     // match, so every later consumer of the scope (CDC reads, stream
     // re-emission, rewrite_deletes, the read-side cohort split) prices
     // the files the delete touched, not the snapshot
-    val files = AtomicParquetCatalog.walkDataFiles(versionDir)
+    val files = MetaStore.dataFiles(versionDir)
       .map(p => versionDir.relativize(java.nio.file.Paths.get(p)).toString)
       .toSet
     val scoped = {
@@ -3182,10 +2988,7 @@ private[sources] final class PointerTable(
   override def truncateTable(): Boolean = {
     val v = s"v-${UUID.randomUUID()}"
     val nv = dir.resolve(v)
-    Files.createDirectories(nv)
-    Files.copy(versionDir.resolve("_schema.json"), nv.resolve("_schema.json"))
-    Files.copy(versionDir.resolve("_partitions.txt"),
-      nv.resolve("_partitions.txt"))
+    MetaStore.carrySpec(versionDir, nv)
     try catalog.commitVersion(dir, v,
       expectedBase = Some(versionDir.getFileName.toString), ref = ref)
     catch { case e: Throwable => catalog.dropOrphan(nv); throw e }
@@ -3206,7 +3009,7 @@ private[sources] final class PointerTable(
   // persisted TBLPROPERTIES + the location every catalog table reports
   override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
-    catalog.readProps(dir).foreach { case (k, v) => m.put(k, v) }
+    MetaStore.readProps(dir).foreach { case (k, v) => m.put(k, v) }
     m.put(TableCatalog.PROP_LOCATION, versionDir.toString)
     m
   }
@@ -3473,9 +3276,9 @@ private[sources] final class PointerTable(
                 delegate.onDataWriterCommit(m)
               override def commit(msgs: Array[WriterCommitMessage]): Unit = {
                 delegate.commit(msgs) // merged rows land flat in _staging
-                Files.createDirectories(nv)
-                Files.write(nv.resolve("_schema.json"),
-                  winfo.schema().json.getBytes("UTF-8"))
+                MetaStore.mkdirs(nv)
+                MetaStore.write(nv.resolve("_schema.json"),
+                  winfo.schema().json)
                 op.scannedPartitions match {
                   case Some(rewritten) if parts.nonEmpty =>
                     // PARTITION-LEVEL COW: the scan served only the
@@ -3485,8 +3288,8 @@ private[sources] final class PointerTable(
                     // partition directories — one extra pass over the
                     // TOUCHED rows only — and hard-link every base
                     // partition the scan did not read.
-                    Files.write(nv.resolve("_partitions.txt"),
-                      PartitionField.serialize(fields).getBytes("UTF-8"))
+                    MetaStore.write(nv.resolve("_partitions.txt"),
+                      PartitionField.serialize(fields))
                     val staged = IdentityColumns.refuseNulls(
                       spark.read.schema(winfo.schema())
                         .parquet(staging.toString),
@@ -3513,8 +3316,8 @@ private[sources] final class PointerTable(
                     // one-extra-pass the pruned path pays, here over the
                     // whole table because the whole table was rewritten
                     // anyway (AtomicCatalogSpec pins layout survival).
-                    Files.write(nv.resolve("_partitions.txt"),
-                      PartitionField.serialize(fields).getBytes("UTF-8"))
+                    MetaStore.write(nv.resolve("_partitions.txt"),
+                      PartitionField.serialize(fields))
                     val staged = IdentityColumns.refuseNulls(
                       spark.read.schema(winfo.schema())
                         .parquet(staging.toString),
@@ -3522,7 +3325,7 @@ private[sources] final class PointerTable(
                     writeInto(nv, staged, "append")
                     catalog.dropOrphan(staging)
                   case _ if IdentityColumns.has(tableSchema) || {
-                      val p = AtomicParquetCatalog.readProps(dir)
+                      val p = MetaStore.readProps(dir)
                       p.contains("write.sort-cols") ||
                         p.contains("write.bloom-cols")
                     } =>
@@ -3536,7 +3339,7 @@ private[sources] final class PointerTable(
                     // one-extra-pass re-read so the refusal guard /
                     // the layout router's sort + bloom options see
                     // every row
-                    Files.write(nv.resolve("_partitions.txt"), Array.empty[Byte])
+                    MetaStore.write(nv.resolve("_partitions.txt"), "")
                     val staged = IdentityColumns.refuseNulls(
                       spark.read.schema(winfo.schema())
                         .parquet(staging.toString),
@@ -3547,13 +3350,13 @@ private[sources] final class PointerTable(
                     // whole-table COW on an UNPARTITIONED table: the
                     // staged flat files ARE the new table — hoist them
                     // out of _staging
-                    Files.write(nv.resolve("_partitions.txt"), Array.empty[Byte])
+                    MetaStore.write(nv.resolve("_partitions.txt"), "")
                     if (Files.isDirectory(staging)) {
-                      Files.list(staging).iterator().asScala.toSeq.foreach { f =>
+                      MetaStore.list(staging).foreach { f =>
                         val n = f.getFileName.toString
                         if (Files.isRegularFile(f) && !n.startsWith("_") &&
                             !n.startsWith("."))
-                          Files.move(f, nv.resolve(n))
+                          MetaStore.move(f, nv.resolve(n))
                       }
                       catalog.dropOrphan(staging)
                     }
@@ -3621,9 +3424,7 @@ private[sources] final class PointerTable(
           delegate.onDataWriterCommit(m)
         override def commit(msgs: Array[WriterCommitMessage]): Unit = {
           delegate.commit(msgs) // staged flat files land under _staging
-          Files.createDirectories(nv)
-          Files.copy(versionDir.resolve("_schema.json"), nv.resolve("_schema.json"))
-          Files.copy(versionDir.resolve("_partitions.txt"), nv.resolve("_partitions.txt"))
+          MetaStore.carrySpec(versionDir, nv)
           val staged = IdentityColumns.refuseNulls(
             spark.read.schema(winfo.schema()).parquet(staging.toString),
             tableSchema, "a dynamic partition overwrite")
@@ -3688,9 +3489,7 @@ private[sources] final class PointerTable(
             // then must surface as a conflict, not be silently clobbered
             val v = s"v-${UUID.randomUUID()}"
             val nv = dir.resolve(v)
-            Files.createDirectories(nv)
-            Files.copy(versionDir.resolve("_schema.json"), nv.resolve("_schema.json"))
-            Files.copy(versionDir.resolve("_partitions.txt"), nv.resolve("_partitions.txt"))
+            MetaStore.carrySpec(versionDir, nv)
             // identity columns: allocate values for omitted (null) ids,
             // continuing from the base version's footer-stats watermark
             val hasIdentity = IdentityColumns.has(tableSchema)
@@ -3702,7 +3501,7 @@ private[sources] final class PointerTable(
               writeInto(nv, routed, "append"))
             // the files THIS write produced, before any links ride in —
             // exactly what a conflict rebase must replay onto a new head
-            val newFiles = AtomicParquetCatalog.walkDataFiles(nv)
+            val newFiles = MetaStore.dataFiles(nv)
               .map(p => nv.relativize(Paths.get(p)).toString)
             // fast-append: the prior version's data files ride along as
             // hard links (no data copy) — legacy `_spec-<k>` subtrees
@@ -3789,12 +3588,11 @@ private[sources] final class PointerTable(
       }
       val headDir = dir.resolve(head)
       val sameShape =
-        try Some(java.util.Arrays.equals(
-          Files.readAllBytes(headDir.resolve("_schema.json")),
-          Files.readAllBytes(cur.resolve("_schema.json"))) &&
-          java.util.Arrays.equals(
-            Files.readAllBytes(headDir.resolve("_partitions.txt")),
-            Files.readAllBytes(cur.resolve("_partitions.txt"))) &&
+        try Some(
+          MetaStore.read(headDir.resolve("_schema.json")) ==
+            MetaStore.read(cur.resolve("_schema.json")) &&
+          MetaStore.read(headDir.resolve("_partitions.txt")) ==
+            MetaStore.read(cur.resolve("_partitions.txt")) &&
           Files.exists(headDir.resolve("_legacy_specs.txt")) ==
             Files.exists(cur.resolve("_legacy_specs.txt")))
         catch { case e: java.io.IOException => None } // head vacuumed: re-read
@@ -3812,14 +3610,10 @@ private[sources] final class PointerTable(
           val nv2 = dir.resolve(v2)
           val stagedOk =
             try {
-              Files.createDirectories(nv2)
-              Files.copy(headDir.resolve("_schema.json"),
-                nv2.resolve("_schema.json"))
-              Files.copy(headDir.resolve("_partitions.txt"),
-                nv2.resolve("_partitions.txt"))
+              MetaStore.carrySpec(headDir, nv2)
               newFiles.foreach { rel =>
-                AtomicParquetCatalog.linkOrCopy(cur.resolve(rel),
-                  nv2.resolve(rel))
+                MetaStore.mkdirs(nv2.resolve(rel).getParent)
+                MetaStore.linkOrCopy(cur.resolve(rel), nv2.resolve(rel))
               }
               catalog.linkDataFiles(headDir, nv2)
               catalog.carryLegacySpecs(headDir, nv2)
@@ -3925,9 +3719,6 @@ private[sources] final class StagedPointerTable(
   override def commitStagedChanges(): Unit =
     catalog.commitVersion(dir, version, expectedBase = base)
 
-  override def abortStagedChanges(): Unit = {
-    val v = dir.resolve(version)
-    if (Files.exists(v))
-      Files.walk(v).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-  }
+  override def abortStagedChanges(): Unit =
+    MetaStore.deleteTree(dir.resolve(version))
 }

@@ -267,7 +267,7 @@ private[sources] object BloomIndex {
          // a commit-side store compaction may delete a part file
          // between our listing and this read: treat the store as
          // absent this plan (conservative keep), never fail the query
-         content <- SidecarStore.readSafe(p).toSeq;
+         content <- MetaStore.readIfPresent(p).toSeq;
          line <- content.split("\n")
          if line.nonEmpty) {
       val f = line.split("\t", -1)

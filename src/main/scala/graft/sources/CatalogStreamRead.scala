@@ -2,8 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Path => JPath}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.read.partitioning.{Partitioning, UnknownPartitioning}
@@ -102,12 +100,7 @@ private[sources] final class CatalogMicroBatchStream(
     availableNowCap = Some(if (l.isEmpty) "" else l.head)
   }
 
-  private def log(): Seq[String] = {
-    val p = tableDir.resolve(opts.ref)
-    if (!Files.exists(p)) Seq.empty
-    else new String(Files.readAllBytes(p), "UTF-8").linesIterator
-      .map(_.trim).filter(_.nonEmpty).toSeq
-  }
+  private def log(): Seq[String] = MetaStore.lines(tableDir.resolve(opts.ref))
 
   /** Relative data-file paths of one committed version. Version
     * directories are IMMUTABLE once committed, so the walked file set
@@ -128,16 +121,8 @@ private[sources] final class CatalogMicroBatchStream(
     if (!Files.isDirectory(v)) throw new IllegalStateException(
       s"$name: stream offset $version is no longer in the retention " +
         "window (vacuumed) — restart the stream from a fresh checkpoint")
-    val walk = Files.walk(v)
     val files =
-      try walk.iterator().asScala.collect {
-        case p if Files.isRegularFile(p) &&
-            !p.getFileName.toString.startsWith("_") &&
-            !p.getFileName.toString.startsWith(".") &&
-            PartitionRuntimeFilters.isDataRel(v.relativize(p).toString) =>
-          v.relativize(p).toString
-      }.toSet
-      finally walk.close()
+      MetaStore.walkData(v)(_.map(p => v.relativize(p).toString).toSet)
     fileCache.put(version, files)
     files
   }
@@ -306,13 +291,7 @@ private[sources] final class CatalogMicroBatchStream(
   }
 
   private def commitMs(v: String): Long =
-    try new String(Files.readAllBytes(
-      tableDir.resolve(v).resolve("_committed_at")), "UTF-8").trim.toLong
-    catch {
-      case _: Exception =>
-        try Files.getLastModifiedTime(tableDir.resolve(v)).toMillis
-        catch { case _: java.io.IOException => Long.MaxValue }
-    }
+    MetaStore.committedAt(tableDir.resolve(v)).getOrElse(Long.MaxValue)
 
   /** The starting position: with no option, "before everything" (the
     * first batch is the full snapshot). `startingVersion` serves

@@ -30,25 +30,20 @@ import org.apache.spark.util.SerializableConfiguration
 private[sources] object StreamEpochs {
   val FileName = "_stream_commits.tsv"
 
-  def read(versionDir: JPath): Map[String, Long] = {
-    val p = versionDir.resolve(FileName)
-    if (!Files.exists(p)) Map.empty
-    else new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
-      .map(_.trim).filter(_.nonEmpty)
-      .map { l => val Array(q, e) = l.split("\t", 2); q -> e.toLong }.toMap
-  }
+  def read(versionDir: JPath): Map[String, Long] =
+    MetaStore.tsvMap(versionDir.resolve(FileName))
+      .map { case (q, e) => q -> e.toLong }
 
   def write(versionDir: JPath, m: Map[String, Long]): Unit =
-    Files.write(versionDir.resolve(FileName),
-      m.toSeq.sorted.map { case (q, e) => s"$q\t$e" }
-        .mkString("\n").getBytes("UTF-8"))
+    MetaStore.write(versionDir.resolve(FileName),
+      m.toSeq.sorted.map { case (q, e) => s"$q\t$e" }.mkString("\n"))
 
   /** Carry the ledger from the outgoing head into a version that did
     * not write its own (the streaming sink's commits do — theirs wins). */
   def carry(from: JPath, to: JPath): Unit = {
     val src = from.resolve(FileName)
     if (Files.exists(src) && !Files.exists(to.resolve(FileName)))
-      Files.copy(src, to.resolve(FileName),
+      MetaStore.copy(src, to.resolve(FileName),
         StandardCopyOption.COPY_ATTRIBUTES)
   }
 }
@@ -129,7 +124,7 @@ private[sources] final class GraftStreamingWrite(
           // and Spark's offset record): already inside the snapshot
           committed = true
         } else {
-          val (headSchema, headFields) = catalog.readMetaOf(headDir)
+          val (headSchema, headFields) = AtomicParquetCatalog.readMeta(headDir)
           def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
           if (shape(headSchema) != shape(writeSchema))
             throw new IllegalStateException(
@@ -147,18 +142,14 @@ private[sources] final class GraftStreamingWrite(
           // never drop a version the log now references.
           val stagedOk =
             try {
-              Files.createDirectories(nv)
-              Files.copy(headDir.resolve("_schema.json"),
-                nv.resolve("_schema.json"))
-              Files.copy(headDir.resolve("_partitions.txt"),
-                nv.resolve("_partitions.txt"))
+              MetaStore.carrySpec(headDir, nv)
               if (headFields.isEmpty) {
                 // unpartitioned: the staged files ARE the layout —
                 // hard-link them in (names embed partition/task/uuid,
                 // collision-free)
                 files.foreach { f =>
                   val src = Paths.get(f)
-                  AtomicParquetCatalog.linkOrCopy(src,
+                  MetaStore.linkOrCopy(src,
                     nv.resolve(src.getFileName.toString))
                 }
               } else {
@@ -204,14 +195,14 @@ private[sources] final class GraftStreamingWrite(
         }
       }
     } finally {
-      try AtomicParquetCatalog.deleteTree(epochDir)
+      try MetaStore.deleteTree(epochDir)
       catch { case _: java.io.IOException => () }
     }
   }
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    try AtomicParquetCatalog.deleteTree(
+    try MetaStore.deleteTree(
       stagingRoot.resolve(s"epoch-$epochId"))
     catch { case _: java.io.IOException => () }
   }
@@ -231,7 +222,7 @@ private[sources] final class EpochFileWriterFactory(
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = {
     val epochDir = Paths.get(stagingRoot, s"epoch-$epochId")
-    Files.createDirectories(epochDir)
+    MetaStore.mkdirs(epochDir)
     val attempt = new TaskAttemptID(
       new TaskID(new JobID("graft-stream", (epochId & 0x7fffffff).toInt),
         TaskType.MAP, partitionId),
@@ -252,7 +243,7 @@ private[sources] final class EpochFileWriterFactory(
       }
       override def abort(): Unit = {
         writer.close()
-        Files.deleteIfExists(Paths.get(path)); ()
+        MetaStore.delete(Paths.get(path)); ()
       }
       override def close(): Unit = ()
     }

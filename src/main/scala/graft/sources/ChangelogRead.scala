@@ -75,13 +75,7 @@ private[sources] object ChangelogRead {
 
   /** Commit instant of a version directory (epoch millis). */
   def commitMs(tableDir: JPath, v: String): Long =
-    try new String(Files.readAllBytes(
-      tableDir.resolve(v).resolve("_committed_at")), "UTF-8").trim.toLong
-    catch {
-      case _: Exception =>
-        try Files.getLastModifiedTime(tableDir.resolve(v)).toMillis
-        catch { case _: java.io.IOException => 0L }
-    }
+    MetaStore.committedAt(tableDir.resolve(v)).getOrElse(0L)
 
   /** The deterministic unit list for a `base → upto` advance.
     * `base == ""` is the initial snapshot: every file of `upto` as
@@ -111,7 +105,7 @@ private[sources] object ChangelogRead {
         s"$tableName: version $v is no longer retained — the change " +
           "window spans an expired snapshot; restart the stream from a " +
           "fresh checkpoint")
-      val set = AtomicParquetCatalog.walkDataFiles(vd)
+      val set = MetaStore.dataFiles(vd)
         .map(f => vd.relativize(Paths.get(f)).toString).toSet
       if (fileSets != null) fileSets.put(v, set) else local.put(v, set)
       set
@@ -183,18 +177,7 @@ private[sources] object ChangelogRead {
         // by the MoR commit funnel) — its units serve Delta CDF's
         // update_preimage/update_postimage types instead of
         // delete/insert, so consumers stop re-pairing updates by key
-        val (preEntries, postRels) = {
-          val m = nd.resolve(DeltaRowLevel.CdcTypesMarker)
-          if (!Files.exists(m)) (Set.empty[String], Set.empty[String])
-          else {
-            val ls = new String(Files.readAllBytes(m), "UTF-8")
-              .split("\n").toSeq.filter(_.nonEmpty)
-            (ls.collect { case l if l.startsWith("preimage\t") =>
-              l.substring("preimage\t".length) }.toSet,
-              ls.collect { case l if l.startsWith("postimage\t") =>
-                l.substring("postimage\t".length) }.toSet)
-          }
-        }
+        val (preEntries, postRels) = DeltaRowLevel.readCdcTypes(nd)
         val ins = (added0 -- relocatedTargets).toSeq.sorted.map(r =>
           ChangeUnit(next, next, r,
             if (postRels.contains(r)) "update_postimage" else "insert",

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path => JPath, Paths}
+import java.nio.file.{Path => JPath, Paths}
 import java.util.UUID
 
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
@@ -98,6 +98,15 @@ private[sources] object DeltaRowLevel {
     * commit's delete units `update_preimage` and those files' rows
     * `update_postimage` instead of delete/insert. */
   val CdcTypesMarker = "_cdc_types"
+
+  /** A version's [[CdcTypesMarker]] as (preimage entry ids, postimage
+    * file rels); both empty when the version has none. */
+  def readCdcTypes(versionDir: JPath): (Set[String], Set[String]) = {
+    val ls = MetaStore.lines(versionDir.resolve(CdcTypesMarker))
+    def tagged(tag: String) = ls.collect {
+      case l if l.startsWith(tag) => l.substring(tag.length) }.toSet
+    (tagged("preimage\t"), tagged("postimage\t"))
+  }
   val SessionModeConf = "spark.sql.catalog.graft.write.rowLevelMode"
 
   private def propFor(cmd: RowLevelOperation.Command): String =
@@ -117,7 +126,7 @@ private[sources] object DeltaRowLevel {
   def eligibleRowId(catalog: AtomicParquetCatalog, dir: JPath,
       schema: StructType, cmd: RowLevelOperation.Command,
       spark: SparkSession): Option[Seq[String]] = {
-    val mode = catalog.readProps(dir).get(propFor(cmd))
+    val mode = MetaStore.readProps(dir).get(propFor(cmd))
       .orElse(spark.conf.getOption(SessionModeConf))
     if (!mode.contains("merge-on-read")) return None
     TableConstraints.read(dir).collectFirst {
@@ -142,7 +151,7 @@ private[sources] object DeltaRowLevel {
   }
 
   def maxDeleteKeys(catalog: AtomicParquetCatalog, dir: JPath): Int =
-    catalog.readProps(dir).get(MaxKeysProp)
+    MetaStore.readProps(dir).get(MaxKeysProp)
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1000000)
 
   /** Should this operation run POSITIONAL merge-on-read — Iceberg v2's
@@ -154,7 +163,7 @@ private[sources] object DeltaRowLevel {
   def eligiblePositional(catalog: AtomicParquetCatalog, dir: JPath,
       schema: StructType, cmd: RowLevelOperation.Command,
       spark: SparkSession): Boolean = {
-    val mode = catalog.readProps(dir).get(propFor(cmd))
+    val mode = MetaStore.readProps(dir).get(propFor(cmd))
       .orElse(spark.conf.getOption(SessionModeConf))
     mode.contains("merge-on-read") &&
       // the metadata pair must not be shadowed by data columns
@@ -265,18 +274,14 @@ private[sources] final class GraftDeltaWrite(
         val nv = dir.resolve(v)
         val committed =
           try {
-            Files.createDirectories(nv)
-            Files.copy(versionDir.resolve("_schema.json"),
-              nv.resolve("_schema.json"))
-            Files.copy(versionDir.resolve("_partitions.txt"),
-              nv.resolve("_partitions.txt"))
+            MetaStore.carrySpec(versionDir, nv)
             catalog.linkDataFiles(versionDir, nv)
             catalog.carryLegacySpecs(versionDir, nv)
             MorDeletes.carry(versionDir, nv)
             // the base file set BEFORE the new files land — the
             // equality deletes scope to it, so rows this same commit
             // inserts (and rows of later appends) are never touched
-            val baseFiles = AtomicParquetCatalog.walkDataFiles(versionDir)
+            val baseFiles = MetaStore.dataFiles(versionDir)
               .map(p => versionDir.relativize(Paths.get(p)).toString).toSet
             // CDF TYPED UPDATES (`write.cdf.typed-updates`): the commit
             // KNOWS which matched rows were UPDATES — their key
@@ -298,7 +303,7 @@ private[sources] final class GraftDeltaWrite(
             // deleted == reinserted count, and anything else stays
             // honestly untyped.
             val typedUpdatesOn =
-              catalog.readProps(dir).get("write.cdf.typed-updates")
+              MetaStore.readProps(dir).get("write.cdf.typed-updates")
                 .contains("true")
             val deletedTotal = msgs.map(_.deleted).sum
             val reinsertedTotal = msgs.map(_.reinserted).sum
@@ -311,7 +316,7 @@ private[sources] final class GraftDeltaWrite(
             var preimageEntry: Option[String] = None
             var postimageRels: Seq[String] = Nil
             def newRels(): Set[String] =
-              AtomicParquetCatalog.walkDataFiles(nv)
+              MetaStore.dataFiles(nv)
                 .map(p => nv.relativize(Paths.get(p)).toString).toSet
             if (idFiles.nonEmpty && baseFiles.nonEmpty) {
               val cap = DeltaRowLevel.maxDeleteKeys(catalog, dir)
@@ -470,7 +475,7 @@ private[sources] final class GraftDeltaWrite(
             }
             if (dataFiles.nonEmpty || rinsFiles.nonEmpty) {
               val routed = {
-                val p = catalog.readProps(dir)
+                val p = MetaStore.readProps(dir)
                 p.contains("write.sort-cols") || p.contains("write.bloom-cols")
               }
               if (!hasIdentity && !routed && fields.isEmpty) {
@@ -482,7 +487,7 @@ private[sources] final class GraftDeltaWrite(
                 // the postimage file identities survive the move for free
                 (dataFiles ++ rinsFiles).foreach { f =>
                   val src = Paths.get(f)
-                  Files.move(src, nv.resolve(src.getFileName.toString))
+                  MetaStore.move(src, nv.resolve(src.getFileName.toString))
                 }
                 if (typedCommit) postimageRels = rinsFiles.toSeq
                   .map(f => Paths.get(f).getFileName.toString)
@@ -545,8 +550,8 @@ private[sources] final class GraftDeltaWrite(
               val lines =
                 preimageEntry.map(id => s"preimage\t$id").toSeq ++
                   postimageRels.sorted.map(r => s"postimage\t$r")
-              Files.write(nv.resolve(DeltaRowLevel.CdcTypesMarker),
-                lines.mkString("\n").getBytes("UTF-8"))
+              MetaStore.write(nv.resolve(DeltaRowLevel.CdcTypesMarker),
+                lines.mkString("\n"))
             }
             true
           } catch {
@@ -587,7 +592,7 @@ private[sources] final class GraftDeltaWriterFactory(
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] = {
     val stagingDir = Paths.get(stagingRoot)
-    Files.createDirectories(stagingDir)
+    MetaStore.mkdirs(stagingDir)
 
     def open(owf: OutputWriterFactory, conf: SerializableConfiguration,
         schema: StructType, kind: String) = {
@@ -657,11 +662,11 @@ private[sources] final class GraftDeltaWriterFactory(
 
       override def abort(): Unit = {
         if (dataWriter != null) { dataWriter.close()
-          Files.deleteIfExists(Paths.get(dataPath)) }
+          MetaStore.delete(Paths.get(dataPath)) }
         if (rinsWriter != null) { rinsWriter.close()
-          Files.deleteIfExists(Paths.get(rinsPath)) }
+          MetaStore.delete(Paths.get(rinsPath)) }
         if (idWriter != null) { idWriter.close()
-          Files.deleteIfExists(Paths.get(idPath)) }
+          MetaStore.delete(Paths.get(idPath)) }
         ()
       }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path => JPath, StandardCopyOption}
+import java.nio.file.{Files, Path => JPath}
 import java.util.{Base64, UUID}
 
 import scala.jdk.CollectionConverters._
@@ -20,28 +20,21 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** Shared mechanics of the append-only TSV sidecar stores
   * (`_filestats`, `_bloomidx`): atomic part-file writes, race-tolerant
-  * listing/read/fingerprinting (a commit-side store compaction may
-  * delete a part file under a lock-free reader — every reader degrades
-  * to "no sidecar this plan", conservative keep, never a failed
-  * query), live-path compaction keyed on the first TSV field, and
-  * clone-time link carry. One implementation so the two stores'
-  * contracts cannot drift apart. */
+  * listing/fingerprinting (a commit-side store compaction may delete a
+  * part file under a lock-free reader — every reader degrades to "no
+  * sidecar this plan", conservative keep, never a failed query; parts
+  * are read with [[MetaStore.readIfPresent]]), live-path compaction
+  * keyed on the first TSV field, and clone-time link carry. One
+  * implementation so the two stores' contracts cannot drift apart. */
 private[sources] object SidecarStore {
 
   def list(store: JPath): Seq[JPath] = {
     if (!Files.isDirectory(store)) return Nil
     val ls =
-      try Files.list(store)
+      try MetaStore.list(store)
       catch { case _: java.io.IOException => return Nil }
-    try ls.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".tsv")).toSeq.sortBy(_.toString)
-    finally ls.close()
+    ls.filter(_.getFileName.toString.endsWith(".tsv")).sortBy(_.toString)
   }
-
-  /** None when the file vanished mid-read (the compaction race). */
-  def readSafe(p: JPath): Option[String] =
-    try Some(new String(Files.readAllBytes(p), "UTF-8"))
-    catch { case _: java.io.IOException => None }
 
   /** Cache fingerprint over the listed parts. A part that vanishes
     * between listing and stat contributes "?" — such a fingerprint can
@@ -55,11 +48,9 @@ private[sources] object SidecarStore {
     }.mkString(",")
 
   def writeFile(store: JPath, prefix: String, lines: Seq[String]): Unit = {
-    Files.createDirectories(store)
-    val tmp = store.resolve(s".$prefix-tmp-${UUID.randomUUID()}")
-    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    Files.move(tmp, store.resolve(s"$prefix-${UUID.randomUUID()}.tsv"),
-      StandardCopyOption.ATOMIC_MOVE)
+    MetaStore.mkdirs(store)
+    MetaStore.replace(store.resolve(s"$prefix-${UUID.randomUUID()}.tsv"),
+      lines.mkString("\n"))
   }
 
   /** Merge a many-part store into one file and PURGE lines whose
@@ -75,7 +66,7 @@ private[sources] object SidecarStore {
                    live: => Set[String]): Boolean = {
     val parts = list(store)
     if (parts.size <= compactAt) return false
-    val contents = parts.map(readSafe)
+    val contents = parts.map(MetaStore.readIfPresent)
     if (contents.exists(_.isEmpty)) {
       System.err.println(s"[graft-sidecar] WARN: $store compaction " +
         "skipped — a part file failed to read; retrying next commit")
@@ -85,7 +76,7 @@ private[sources] object SidecarStore {
     val all = contents.flatten.flatMap(_.split("\n"))
       .filter(l => l.nonEmpty && liveSet.contains(l.takeWhile(_ != '\t')))
     writeFile(store, prefix, all)
-    parts.foreach(Files.deleteIfExists(_))
+    parts.foreach(MetaStore.delete)
     true
   }
 
@@ -94,15 +85,9 @@ private[sources] object SidecarStore {
     * the destination's. */
   def carry(src: JPath, dst: JPath): Unit = {
     if (!Files.isDirectory(src)) return
-    Files.createDirectories(dst)
-    list(src).foreach { f =>
-      val out = dst.resolve(f.getFileName.toString)
-      try { Files.createLink(out, f); () }
-      catch {
-        case _: UnsupportedOperationException | _: java.io.IOException =>
-          Files.copy(f, out, StandardCopyOption.REPLACE_EXISTING); ()
-      }
-    }
+    MetaStore.mkdirs(dst)
+    list(src).foreach(f =>
+      MetaStore.linkOrCopy(f, dst.resolve(f.getFileName.toString)))
   }
 }
 
@@ -201,7 +186,7 @@ private[sources] object FileStats {
     * tax on single-row commit loops (streaming epochs). Same
     * soak-then-default posture cleanCountPruning took in r17. */
   def sumsEnabled(s: SparkSession, tableDir: JPath): Boolean =
-    AtomicParquetCatalog.readProps(tableDir)
+    MetaStore.readProps(tableDir)
       .get("write.stats.sums").contains("true") ||
       s.conf.getOption("spark.sql.catalog.graft.write.fileSums")
         .contains("true")
@@ -296,7 +281,7 @@ private[sources] object FileStats {
     val ct = AtomicParquetCatalog.ctime[Seq[(String, String)]] _
     val covered = AtomicParquetCatalog.ctime("fs.covered")(
       coveredKeys(tableDir))
-    val files = ct("fs.walk")(AtomicParquetCatalog.walkDataFiles(versionDir)
+    val files = ct("fs.walk")(MetaStore.dataFiles(versionDir)
       .map(p => (p, relOf(versionDir, p)))
       .filter { case (_, rel) => !covered.contains(rel) })
     if (files.isEmpty) {
@@ -382,12 +367,10 @@ private[sources] object FileStats {
   /** Every retained version's live data files as version-relative
     * paths — the purge set both sidecar compactions run against. */
   private def livePaths(tableDir: JPath, inFlight: Option[JPath]): Set[String] = {
-    val logged =
-      try new String(Files.readAllBytes(tableDir.resolve("_current")),
-        "UTF-8").split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      catch { case _: java.io.IOException => Nil }
+    val logged = MetaStore.readIfPresent(tableDir.resolve("_current"))
+      .toSeq.flatMap(MetaStore.splitLines)
     (logged.map(tableDir.resolve) ++ inFlight)
-      .flatMap(v => AtomicParquetCatalog.walkDataFiles(v).map(relOf(v, _)))
+      .flatMap(v => MetaStore.dataFiles(v).map(relOf(v, _)))
       .toSet
   }
 
@@ -409,7 +392,7 @@ private[sources] object FileStats {
 
   private[sources] def coveredKeys(tableDir: JPath): Set[String] =
     SidecarStore.list(tableDir.resolve(STORE)).flatMap(f =>
-      SidecarStore.readSafe(f).toSeq.flatMap(_.split("\n").iterator
+      MetaStore.readIfPresent(f).toSeq.flatMap(_.split("\n").iterator
         .filter(_.nonEmpty).map(_.takeWhile(_ != '\t')))).toSet
 
   /** Clone-time sidecar carry: the destination links the same data
@@ -610,7 +593,7 @@ private[sources] object FileStats {
          // a commit-side store compaction may delete a part file
          // between listing and read (the reader takes no lock): lose
          // those stats this plan — conservative keep — not the query
-         content <- SidecarStore.readSafe(p).toSeq;
+         content <- MetaStore.readIfPresent(p).toSeq;
          line <- content.split("\n")
          if line.nonEmpty) {
       val f = line.split("\t", -1)

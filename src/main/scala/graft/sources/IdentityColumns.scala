@@ -127,7 +127,7 @@ private[sources] object IdentityColumns {
   private def watermark(spark: SparkSession, tableDir: JPath,
       versionDir: JPath, schema: StructType, colName: String,
       ascending: Boolean): Option[Long] = {
-    val rels = AtomicParquetCatalog.walkDataFiles(versionDir)
+    val rels = MetaStore.dataFiles(versionDir)
       .map(p => versionDir.relativize(Paths.get(p)).toString)
     if (rels.isEmpty) return None
     val stats = FileStats.load(tableDir)

@@ -225,7 +225,7 @@ private[sources] final class KeyGroupedParquetScanBuilder(
   private lazy val metaStats: Map[String, FileStats.FileStat] =
     FileStats.load(versionDir.getParent)
   private lazy val metaFiles: Seq[String] =
-    AtomicParquetCatalog.walkDataFiles(versionDir)
+    MetaStore.dataFiles(versionDir)
       .map(p => versionDir.relativize(java.nio.file.Paths.get(p)).toString)
   private lazy val metaIncluded: Seq[String] = prunedKeep match {
     case Some(keep) => metaFiles.filter(keep.contains)
@@ -827,7 +827,7 @@ private[sources] final class KeyGroupedParquetScanBuilder(
       else new SpecUnionScan(buildInner() +: legacy.map {
         case (sub, lf) => legacyScan(sub, lf)
       }, scanName, () =>
-        AtomicParquetCatalog.walkDataFiles(versionDir).map { p =>
+        MetaStore.dataFiles(versionDir).map { p =>
           try java.nio.file.Files.size(java.nio.file.Paths.get(p))
           catch { case _: java.io.IOException => 0L }
         }.sum)
@@ -884,7 +884,7 @@ private[sources] final class KeyGroupedParquetScanBuilder(
       java.util.Collections.singletonMap("basePath", subDir.toString))
     // LEAF files, not the subtree root: the `_spec-<k>` directory name
     // itself would be dropped by Spark's hidden-path listing filter
-    val files = AtomicParquetCatalog.walkDataFiles(subDir)
+    val files = MetaStore.dataFiles(subDir)
     val builder = org.apache.spark.sql.execution.datasources.v2.parquet
       .ParquetTable(s"$scanName-$sub", session, options,
         files, Some(MorDeletes.withRowIndex(tableSchema)),

@@ -1,9 +1,7 @@
 package graft.sources
 
-import java.nio.file.{Files, Path => JPath, StandardCopyOption}
+import java.nio.file.{Files, Path => JPath}
 import java.util.{Base64, UUID}
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -481,27 +479,20 @@ private[sources] object MorDeletes {
   def hasLive(versionDir: JPath): Boolean = {
     val d = versionDir.resolve(DIR)
     if (!Files.isDirectory(d)) return false
-    val ls = Files.list(d)
-    try ls.iterator().asScala.exists { p =>
+    MetaStore.list(d).exists { p =>
       val n = p.getFileName.toString
       n.endsWith(".pred") || n.endsWith(".pos")
     }
-    finally ls.close()
   }
 
   def entries(versionDir: JPath): Seq[DeleteEntry] = {
     val d = versionDir.resolve(DIR)
     if (!Files.isDirectory(d)) return Nil
-    val ls = Files.list(d)
-    val ids =
-      try ls.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".pred")).map(_.stripSuffix(".pred")).toSeq.sorted
-      finally ls.close()
+    val ids = MetaStore.list(d).map(_.getFileName.toString)
+      .filter(_.endsWith(".pred")).map(_.stripSuffix(".pred")).sorted
     ids.map { id =>
-      val node = parse(new String(
-        Files.readAllBytes(d.resolve(s"$id.pred")), "UTF-8"))
-      val files = new String(
-        Files.readAllBytes(d.resolve(s"$id.files")), "UTF-8")
+      val node = parse(MetaStore.read(d.resolve(s"$id.pred")))
+      val files = MetaStore.read(d.resolve(s"$id.files"))
         .split("\n").iterator.filter(_.nonEmpty).toSet
       // optional matched-row count sidecar (written before `.pred`,
       // so a visible entry either has its count whole or never had
@@ -509,7 +500,7 @@ private[sources] object MorDeletes {
       val matched = {
         val cf = d.resolve(s"$id.count")
         if (!Files.isRegularFile(cf)) None
-        else try Some(new String(Files.readAllBytes(cf), "UTF-8").trim.toLong)
+        else try Some(MetaStore.read(cf).trim.toLong)
         catch { case _: Exception => None }
       }
       DeleteEntry(id, node, files, matched)
@@ -523,15 +514,11 @@ private[sources] object MorDeletes {
   def posEntries(versionDir: JPath): Seq[PosEntry] = {
     val d = versionDir.resolve(DIR)
     if (!Files.isDirectory(d)) return Nil
-    val ls = Files.list(d)
-    val ids =
-      try ls.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.endsWith(".pos") && !n.startsWith("."))
-        .map(_.stripSuffix(".pos")).toSeq.sorted
-      finally ls.close()
+    val ids = MetaStore.list(d).map(_.getFileName.toString)
+      .filter(n => n.endsWith(".pos") && !n.startsWith("."))
+      .map(_.stripSuffix(".pos")).sorted
     ids.map { id =>
-      val ords = new String(
-        Files.readAllBytes(d.resolve(s"$id.pos")), "UTF-8")
+      val ords = MetaStore.read(d.resolve(s"$id.pos"))
         .split("\n").iterator.filter(_.nonEmpty).map { l =>
           val Array(f, os) = l.split("\t", 2)
           f -> (if (os.isEmpty) Array.empty[Long]
@@ -564,12 +551,11 @@ private[sources] object MorDeletes {
   def writePosEntryAs(versionDir: JPath, id: String,
       ords: Map[String, Array[Long]]): String = {
     val d = versionDir.resolve(DIR)
-    Files.createDirectories(d)
-    val tp = d.resolve(s".$id.pos.tmp")
-    Files.write(tp, ords.toSeq.sortBy(_._1).map { case (f, os) =>
-      s"$f\t${os.sorted.mkString(",")}"
-    }.mkString("\n").getBytes("UTF-8"))
-    Files.move(tp, d.resolve(s"$id.pos"), StandardCopyOption.ATOMIC_MOVE)
+    MetaStore.mkdirs(d)
+    MetaStore.replace(d.resolve(s"$id.pos"),
+      ords.toSeq.sortBy(_._1).map { case (f, os) =>
+        s"$f\t${os.sorted.mkString(",")}"
+      }.mkString("\n"))
     id
   }
 
@@ -587,18 +573,10 @@ private[sources] object MorDeletes {
   def writeEntryAs(versionDir: JPath, id: String, node: Node,
       files: Set[String], matched: Option[Long] = None): String = {
     val d = versionDir.resolve(DIR)
-    Files.createDirectories(d)
-    val tf = d.resolve(s".$id.files.tmp")
-    Files.write(tf, files.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    Files.move(tf, d.resolve(s"$id.files"), StandardCopyOption.ATOMIC_MOVE)
-    matched.foreach { n =>
-      val tc = d.resolve(s".$id.count.tmp")
-      Files.write(tc, n.toString.getBytes("UTF-8"))
-      Files.move(tc, d.resolve(s"$id.count"), StandardCopyOption.ATOMIC_MOVE)
-    }
-    val tp = d.resolve(s".$id.pred.tmp")
-    Files.write(tp, serialize(node).getBytes("UTF-8"))
-    Files.move(tp, d.resolve(s"$id.pred"), StandardCopyOption.ATOMIC_MOVE)
+    MetaStore.mkdirs(d)
+    MetaStore.replace(d.resolve(s"$id.files"), files.toSeq.sorted.mkString("\n"))
+    matched.foreach(n => MetaStore.replace(d.resolve(s"$id.count"), n.toString))
+    MetaStore.replace(d.resolve(s"$id.pred"), serialize(node))
     id
   }
 
@@ -613,41 +591,31 @@ private[sources] object MorDeletes {
     val src = from.resolve(DIR)
     if (!Files.isDirectory(src)) return
     val dst = to.resolve(DIR)
-    Files.createDirectories(dst)
-    val ls = Files.list(src)
-    val names =
-      try ls.iterator().asScala.map(_.getFileName.toString)
-        .filterNot(_.startsWith(".")).toSeq
-      finally ls.close()
+    MetaStore.mkdirs(dst)
+    val names = MetaStore.list(src).map(_.getFileName.toString)
+      .filterNot(_.startsWith("."))
     for (n <- names) {
       val out = dst.resolve(n)
       if (n.endsWith(".files") && rebasePrefix.isDefined) {
         val pfx = rebasePrefix.get
-        val rebased = new String(Files.readAllBytes(src.resolve(n)), "UTF-8")
+        val rebased = MetaStore.read(src.resolve(n))
           .split("\n").iterator.filter(_.nonEmpty)
           .map(f => if (f.startsWith("_spec-")) f else s"$pfx/$f")
           .mkString("\n")
-        Files.write(out, rebased.getBytes("UTF-8"))
+        MetaStore.write(out, rebased)
       } else if (n.endsWith(".pos") && rebasePrefix.isDefined) {
         // positional entries embed their file paths in the payload
         // lines — rebase those the same way as `.files` manifests
         val pfx = rebasePrefix.get
-        val rebased = new String(Files.readAllBytes(src.resolve(n)), "UTF-8")
+        val rebased = MetaStore.read(src.resolve(n))
           .split("\n").iterator.filter(_.nonEmpty)
           .map { l =>
             val Array(f, os) = l.split("\t", 2)
             val nf = if (f.startsWith("_spec-")) f else s"$pfx/$f"
             s"$nf\t$os"
           }.mkString("\n")
-        Files.write(out, rebased.getBytes("UTF-8"))
-      } else {
-        try { Files.createLink(out, src.resolve(n)); () }
-        catch {
-          case _: UnsupportedOperationException | _: java.io.IOException =>
-            Files.copy(src.resolve(n), out,
-              StandardCopyOption.REPLACE_EXISTING); ()
-        }
-      }
+        MetaStore.write(out, rebased)
+      } else MetaStore.linkOrCopy(src.resolve(n), out)
     }
   }
 

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Path => JPath}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal, Expression => CExpression}
@@ -143,16 +141,10 @@ private[sources] object PartitionRuntimeFilters {
     * catalog instance can prune too. Files inside non-layout subtrees
     * (legacy specs, staging) are NOT this layout's partitions and are
     * excluded, mirroring what a scan rooted here would list. */
-  def dataFilePartitionsOf(v: JPath): Set[String] = {
-    val walk = Files.walk(v)
-    try walk.iterator().asScala.collect {
-      case p if Files.isRegularFile(p) &&
-          !p.getFileName.toString.startsWith("_") &&
-          !p.getFileName.toString.startsWith(".") =>
-        Option(v.relativize(p).getParent).map(_.toString).getOrElse("")
-    }.filter(isLayoutDir).toSet
-    finally walk.close() // NIO walk streams hold directory handles
-  }
+  def dataFilePartitionsOf(v: JPath): Set[String] =
+    MetaStore.walkData(v)(_.map(p =>
+      Option(v.relativize(p).getParent).map(_.toString).getOrElse(""))
+      .filter(isLayoutDir).toSet)
 }
 
 /** COMPILE-TIME directory pruning for HIDDEN partition transforms —

@@ -1,7 +1,7 @@
 package graft.sources
 
-import java.nio.file.{Files, Path => JPath, StandardCopyOption}
-import java.util.{Base64, UUID}
+import java.nio.file.{Path => JPath}
+import java.util.Base64
 
 import org.apache.spark.sql.connector.catalog.constraints.{Check, Constraint, GraftConstraintShim, PrimaryKey, Unique}
 import org.apache.spark.sql.connector.expressions.Expressions
@@ -36,10 +36,7 @@ private[sources] object TableConstraints {
   private val FileName = "_constraints"
 
   def read(dir: JPath): Array[Constraint] = {
-    val p = dir.resolve(FileName)
-    if (!Files.exists(p)) return Array.empty
-    new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
-      .map(_.trim).filter(_.nonEmpty).map { line =>
+    MetaStore.lines(dir.resolve(FileName)).map { line =>
         val Array(kind, name, enf, rely, status, payload) =
           line.split("\t", 6)
         val vs = Constraint.ValidationStatus.valueOf(status)
@@ -80,9 +77,6 @@ private[sources] object TableConstraints {
         if (c.rely()) "1" else "0", c.validationStatus().name(), payload)
         .mkString("\t")
     }
-    val tmp = dir.resolve(s"$FileName.tmp-${UUID.randomUUID()}")
-    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    Files.move(tmp, dir.resolve(FileName), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    MetaStore.replace(dir.resolve(FileName), lines.mkString("\n"))
   }
 }

@@ -542,18 +542,8 @@ object Streams {
     def seedInodes(): Map[String, Any] = {
       val wh = s.conf.get("spark.sql.catalog.graft_st.warehouse")
       val tdir = java.nio.file.Paths.get(wh, "db", "user_totals_mor")
-      val cur = tdir.resolve(new String(java.nio.file.Files.readAllBytes(
-        tdir.resolve("_current")), "UTF-8").split("\n").head.trim)
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(cur)
-      try walk.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        java.nio.file.Files.isRegularFile(p) && !n.startsWith("_") &&
-          !n.startsWith(".") &&
-          !cur.relativize(p).toString.startsWith("_deletes/")
-      }.map(p => cur.relativize(p).toString ->
-        java.nio.file.Files.getAttribute(p, "unix:ino")).toMap
-      finally walk.close()
+      graft.ops.Extras.dataInodes(
+        tdir.resolve(graft.sources.MetaStore.lines(tdir.resolve("_current")).head))
     }
     val seeded = seedInodes()
     val src = eventsStream(s, dir).where($"ts" >= cutoff)

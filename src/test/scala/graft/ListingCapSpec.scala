@@ -58,7 +58,6 @@ class ListingCapSpec extends GraftSuite {
       ingestGb = 0.001, payloadKb = 1, partitions = 4)
     Seq(cfg.silverFqn, cfg.goldFqn).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     val cores = spark.sparkContext.defaultParallelism
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       Pipeline.bronze(spark, cfg)
       Pipeline.silver(spark, cfg)
@@ -93,7 +92,6 @@ class ListingCapSpec extends GraftSuite {
       assert(!spark.conf.getAll.contains(Key), s"silverIncremental left $Key set")
     } finally {
       spark.conf.unset(Key)
-      spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
       Seq(cfg.goldFqn, cfg.silverFqn).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }

@@ -115,7 +115,6 @@ class WriteDistributionSpec extends GraftSuite {
       def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
                     e: Exception): Unit = ()
     }
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
     Seq(cfg.silverFqn, cfg.goldFqn).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     try {
       Pipeline.bronze(spark, cfg)
@@ -144,7 +143,6 @@ class WriteDistributionSpec extends GraftSuite {
       assert(rows == spark.table(cfg.silverFqn).count())
     } finally {
       spark.listenerManager.unregister(listener)
-      spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
       spark.sql(s"DROP TABLE IF EXISTS ${cfg.silverFqn}")
     }
   }

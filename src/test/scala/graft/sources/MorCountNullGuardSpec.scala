@@ -37,7 +37,7 @@ class MorCountNullGuardSpec extends GraftSuite {
     val cur = new String(Files.readAllBytes(tdir.resolve("_current")),
       "UTF-8").split("\n").head.trim
     val nv = tdir.resolve(cur)
-    val files = AtomicParquetCatalog.walkDataFiles(nv)
+    val files = MetaStore.dataFiles(nv)
       .map(p => nv.relativize(Paths.get(p)).toString).toSet
     // the hypothetical future shape: a predicate-delete entry over
     // `n IS NULL` that DOES carry its matched count (200 null rows)

@@ -86,7 +86,7 @@ class StreamingWriteSpec extends GraftSuite {
     // the snapshot's layout is the bucket spec, not flat epoch files
     val tdir = java.nio.file.Paths.get(warehouse, "db", "pout")
     val head = tdir.resolve(catalog.versionLog(tdir).head)
-    val parts = AtomicParquetCatalog.walkDataFiles(head)
+    val parts = MetaStore.dataFiles(head)
       .map(p => head.relativize(java.nio.file.Paths.get(p)).toString)
     assert(parts.nonEmpty && parts.forall(_.startsWith("_gb_id=")),
       s"expected bucket-partition dirs, got $parts")
